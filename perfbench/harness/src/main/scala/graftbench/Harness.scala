@@ -1,11 +1,15 @@
 package graftbench
 
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.{GraftSession, Iter, SparkEntry}
 
@@ -16,13 +20,13 @@ import graft.{GraftSession, Iter, SparkEntry}
   * timings (and, when tracing, raw listener records) for `run.py` to
   * turn into metrics.
   *
-  * Usage: `Harness <plan file> <result file>`. The plan is `key=value`
-  * lines written by `run.py`; each `pass=` line is one timed pass, the
-  * query order already fixed by the workload seed. */
+  * Usage: `Harness <plan.json> <result.json>`. The plan is written by
+  * `run.py`; each entry of its `passes` is one pass, the query order
+  * already fixed by the workload seed. */
 object Harness {
   /** The publishers `SparkEntry.prepareFixtures` calls, in its order. The
     * traced run calls them one at a time and then checks that a further
-    * `prepareFixtures` launches no Spark job, which proves this list still
+    * `prepareFixtures` writes nothing, which proves this list still
     * covers the program's. */
   val publishers: Seq[(String, (SparkSession, String) => Any)] = {
     import graft.operators._
@@ -44,19 +48,15 @@ object Harness {
       "prepareGatedStreams" -> (StreamingOps.prepareGatedStreams _))
   }
 
-  final case class Plan(kv: Map[String, String], passes: Vector[Vector[String]]) {
-    def apply(k: String): String = kv.getOrElse(k, sys.error(s"plan lacks $k"))
-    def int(k: String): Int = apply(k).toInt
-  }
-
-  def readPlan(p: Path): Plan = {
-    val lines = Files.readAllLines(p).asScala.toVector.filter(_.contains('='))
-    val kv = lines.map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-    Plan(kv.filter(_._1 != "pass").toMap,
-      kv.collect { case ("pass", v) => v.split(',').toVector.filter(_.nonEmpty) })
-  }
+  implicit val formats: Formats = DefaultFormats
 
   private def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  /** CPU seconds used by every thread of this JVM so far: the driver, the
+    * local executors, GC and JIT. */
+  private def cpuSecs: Double = os.getProcessCpuTime / 1e9
 
   /** A fresh copy of the source tables: new paths and mtimes give every
     * `CachedDir` publish a fingerprint no earlier run has used. */
@@ -70,28 +70,30 @@ object Harness {
 
   /** Old-generation occupancy after a full collection, in MB. In local
     * mode the driver JVM also runs the executors. The first collection
-    * lets Spark's ContextCleaner drop the broadcast and shuffle blocks of
-    * the pass's last queries; the second one measures what stays live. */
+    * clears the finished query's broadcast and shuffle handles; Spark's
+    * ContextCleaner then drops their blocks, which otherwise linger into
+    * the sample at a timing-dependent rate; the second collection frees
+    * them. */
   def liveHeapMb(): Double = {
     System.gc()
-    Thread.sleep(500)
+    Thread.sleep(200)
     System.gc()
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-    val old = pools.filter(p => p.getType == java.lang.management.MemoryType.HEAP &&
-      (p.getName.contains("Old") || p.getName.contains("Tenured")))
+    val old = ManagementFactory.getMemoryPoolMXBeans.asScala.filter(p =>
+      p.getType == MemoryType.HEAP && (p.getName.contains("Old") || p.getName.contains("Tenured")))
     val used = if (old.nonEmpty) old.map(_.getUsage.getUsed).sum
-      else java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+      else ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
     used / 1048576.0
   }
 
   def main(args: Array[String]): Unit = {
-    val plan = readPlan(Paths.get(args(0)))
-    val cores = plan.int("cores")
-    val budget = plan("seconds").toDouble
-    val work = Paths.get(plan("work"))
-    val selected = plan("publishers").split(',').filter(_.nonEmpty).toSet
+    val plan = parse(Files.readString(Paths.get(args(0))))
+    val cores = (plan \ "cores").extract[Int]
+    val budget = (plan \ "seconds").extract[Double]
+    val minPasses = (plan \ "min_passes").extract[Int]
+    val work = Paths.get((plan \ "work").extract[String])
+    val selected = (plan \ "publishers").extract[Seq[String]].toSet
+    val orders = (plan \ "passes").extract[Seq[Seq[String]]].iterator
     val queries = SparkEntry.queries
-    val rec = new Json.Obj
 
     // -- set-up: session build, fixture publish from a fresh source copy,
     //    one untimed warm-up pass (JIT, codegen, lazily published fixtures)
@@ -101,97 +103,102 @@ object Harness {
       .config("spark.sql.warehouse.dir", work.resolve("warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    rec("session_build_s") = secs(t0)
-    val tracer = if (plan("trace") == "1") Tracer.install(spark) else null
-    val dataDir = copySource(Paths.get(plan("source")), work.resolve("source"))
-    rec("publish") = publish(spark, dataDir, publishers.filter(p => selected(p._1)), tracer)
+    val sessionBuildS = secs(t0)
+    val tracer = if ((plan \ "trace").extract[Int] == 1) Tracer.install(spark) else null
+    val dataDir = copySource(Paths.get((plan \ "source").extract[String]), work.resolve("source"))
+    val published = publish(spark, dataDir, publishers.filter(p => selected(p._1)), tracer)
 
-    def runPass(order: Vector[String]): Json.Obj = {
+    /** One pass. A pass that samples the heap after each query leaves
+      * that sampling out of its wall and CPU time. */
+    def runPass(order: Seq[String], sampleHeap: Boolean): JObject = {
       val p0 = System.nanoTime()
+      val c0 = cpuSecs
+      var sampling, samplingCpu = 0.0
       Iter.clearShared(spark)
-      val qrecs = Json.Arr()
-      order.foreach { name => qrecs += runQuery(spark, queries.get(name), name, dataDir, tracer) }
-      Json.obj("wall_s" -> secs(p0), "queries" -> qrecs)
+      val qrecs = order.map { name =>
+        val q = runQuery(spark, queries.get(name), name, dataDir, tracer)
+        if (!sampleHeap) q else {
+          val h0 = System.nanoTime()
+          val hc0 = cpuSecs
+          val heap = liveHeapMb()
+          sampling += secs(h0)
+          samplingCpu += cpuSecs - hc0
+          q ~ ("heap_mb" -> JDouble(heap))
+        }
+      }
+      JObject("wall_s" -> JDouble(secs(p0) - sampling),
+        "cpu_s" -> JDouble(cpuSecs - c0 - samplingCpu), "queries" -> JArray(qrecs.toList))
     }
-    val orders = plan.passes.iterator
-    rec("warmup") = runPass(orders.next())
-    rec("setup_s") = secs(t0)
+    val warmup = runPass(orders.next(), sampleHeap = false)
+    val setupS = secs(t0)
 
     // -- timed passes: closed loop, one client, clearShared at each start;
-    //    after `min_passes`, a pass starts only if it should end in budget
-    val passes = Json.Arr()
-    val heap = Json.Arr()
+    //    after `min_passes`, a pass starts only if it should end in budget.
+    //    The first pass of an untraced run samples the heap after each query
+    val passes = Vector.newBuilder[JObject]
     val cycles = scala.collection.mutable.ArrayBuffer.empty[Double]
     val started = System.nanoTime()
     def predicted = if (cycles.isEmpty) 0.0 else cycles.sorted.apply(cycles.size / 2)
-    while (orders.hasNext &&
-        (cycles.size < plan.int("min_passes") || secs(started) + predicted <= budget)) {
+    while (orders.hasNext && (cycles.size < minPasses || secs(started) + predicted <= budget)) {
       val c0 = System.nanoTime()
-      passes += runPass(orders.next())
-      heap += liveHeapMb()
+      passes += runPass(orders.next(), sampleHeap = cycles.isEmpty && tracer == null)
       cycles += secs(c0)
     }
-    rec("passes") = passes
-    rec("heap_live_mb") = heap
-
+    var rec = JObject("session_build_s" -> JDouble(sessionBuildS), "publish" -> published,
+      "warmup" -> warmup, "setup_s" -> JDouble(setupS), "passes" -> JArray(passes.result().toList))
     if (tracer != null) {
-      if (plan.kv.get("audit").contains("1")) {
+      if ((plan \ "audit").extract[Boolean]) {
         // publish audit: the remaining publishers one at a time; once all
         // fourteen have run, a further prepareFixtures must write nothing
-        rec("audit") = publish(spark, dataDir, publishers.filterNot(p => selected(p._1)), tracer)
-        rec("followup") = publish(spark, dataDir,
-          Seq("prepareFixtures" -> (SparkEntry.prepareFixtures _)), tracer)
+        rec = rec ~
+          ("audit" -> publish(spark, dataDir, publishers.filterNot(p => selected(p._1)), tracer)) ~
+          ("followup" -> publish(spark, dataDir,
+            Seq("prepareFixtures" -> (SparkEntry.prepareFixtures _)), tracer))
       }
-      rec("trace") = tracer.dump()
+      rec = rec ~ ("trace" -> tracer.dump())
     }
     spark.stop()
-    Files.writeString(Paths.get(args(1)), rec.render)
+    Files.writeString(Paths.get(args(1)), compact(render(rec)))
   }
 
   /** Call `pubs` one at a time, in `prepareFixtures` order, timing each. */
   def publish(spark: SparkSession, d: String, pubs: Seq[(String, (SparkSession, String) => Any)],
-              tracer: Tracer): Json.Arr = {
-    val out = Json.Arr()
-    pubs.foreach { case (name, fn) =>
-      val tag = s"publish:$name"
-      if (tracer != null) tracer.begin(tag)
-      val t0 = System.nanoTime()
-      val err = try { fn(spark, d); None } catch { case NonFatal(e) => Some(e) }
-      val o = Json.obj("name" -> name, "wall_s" -> secs(t0))
-      err.foreach(e => o("error") = e.getClass.getName)
-      if (tracer != null) tracer.end(o)
-      System.err.println(s"[graftbench] publish ${o.render}")
-      out += o
-    }
-    out
-  }
+              tracer: Tracer): JArray = JArray(pubs.toList.map { case (name, fn) =>
+    val tag = s"publish:$name"
+    if (tracer != null) tracer.begin(tag)
+    val t0 = System.nanoTime()
+    val err = try { fn(spark, d); JNothing } catch { case NonFatal(e) => JString(e.getClass.getName) }
+    val o = JObject("name" -> JString(name), "wall_s" -> JDouble(secs(t0)), "error" -> err)
+    System.err.println(s"[graftbench] publish ${compact(render(o))}")
+    if (tracer != null) o ~ ("span" -> tracer.end()) else o
+  })
 
   /** One query: construction (`fn(spark, d)`) then the `count` action.
     * A throwing query records its exception class and is never timed as
     * a success; a name absent from `SparkEntry.queries` is `missing`. */
   def runQuery(spark: SparkSession, fn: Option[(SparkSession, String) => DataFrame],
-               name: String, d: String, tracer: Tracer): Json.Obj = {
-    val o = new Json.Obj
-    o("name") = name
-    fn match {
-      case None => o("missing") = true
+               name: String, d: String, tracer: Tracer): JObject = {
+    val o = fn match {
+      case None => JObject("name" -> JString(name), "missing" -> JBool(true))
       case Some(f) =>
         val tag = s"query:$name"
         if (tracer != null) tracer.begin(tag)
         val t0 = System.nanoTime()
+        var fields = List[JField]("name" -> JString(name))
         try {
           val df = f(spark, d)
-          o("construct_s") = secs(t0)
+          fields :+= "construct_s" -> JDouble(secs(t0))
           if (tracer != null) tracer.action(tag)
-          o("rows") = df.count()
+          fields :+= "rows" -> JLong(df.count())
         } catch { case NonFatal(e) =>
-          o("error") = e.getClass.getName
-          o("message") = String.valueOf(e.getMessage).take(300)
+          fields ++= List("error" -> JString(e.getClass.getName),
+            "message" -> JString(String.valueOf(e.getMessage).take(300)))
         }
-        o("wall_s") = secs(t0)
-        if (tracer != null) tracer.end(o)
+        fields :+= "wall_s" -> JDouble(secs(t0))
+        if (tracer != null) fields :+= "span" -> tracer.end()
+        JObject(fields)
     }
-    System.err.println(s"[graftbench] $name ${o.render}")
+    System.err.println(s"[graftbench] ${compact(render(o.removeField(_._1 == "span")))}")
     o
   }
 }
@@ -200,8 +207,7 @@ object Harness {
   * `expected_rows.py`. */
 object OracleDump {
   def main(args: Array[String]): Unit = {
-    val o = new Json.Obj
-    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (k, v) => o(k) = v }
-    Files.writeString(Paths.get(args(0)), o.render)
+    val sqls = SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (k, v) => k -> JString(v) }
+    Files.writeString(Paths.get(args(0)), compact(render(JObject(sqls.toList))))
   }
 }

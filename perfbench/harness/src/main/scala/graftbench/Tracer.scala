@@ -13,13 +13,15 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s._
 
 /** Observes the engine from outside, for the traced run only: Spark's
   * listener bus (jobs, stages, task metrics), the
-  * QueryExecutionListener (each action's planning phases and its
-  * executed plan), the StreamingQueryListener (micro-batches) and the
-  * storage status after each span. Records are kept in memory and dumped once, at the
-  * end of the run; `run.py` builds the span tree and metrics from them.
+  * QueryExecutionListener (each action's planning phases, its execution
+  * time and its executed plan), the StreamingQueryListener
+  * (micro-batches) and the storage status after each span. Records are
+  * kept in memory and dumped once, at the end of the run; `run.py`
+  * builds the span tree and metrics from them.
   *
   * Attribution: the harness tags its own thread with a local property
   * (`query:<name>|construct`, `query:<name>|action`, `publish:<fn>`)
@@ -36,13 +38,13 @@ final class Tracer private (spark: SparkSession) extends SparkListener
     * listener events use. */
   def nowMs: Double = epoch0 + (System.nanoTime() - nano0) / 1e6
 
-  private val jobs = new ConcurrentLinkedQueue[Json.Obj]
-  private val stages = new ConcurrentLinkedQueue[Json.Obj]
+  private val jobs = new ConcurrentLinkedQueue[JObject]
+  private val stages = new ConcurrentLinkedQueue[JObject]
   private val jobStart = new ConcurrentHashMap[Int, (Long, String)]
   private val stageJob = new ConcurrentHashMap[Int, Int]
-  private val pendingQes = new ConcurrentLinkedQueue[Json.Obj]
-  private val pendingBatches = new ConcurrentLinkedQueue[Json.Obj]
-  private var open: Json.Obj = _
+  private val pendingQes = new ConcurrentLinkedQueue[JObject]
+  private val pendingBatches = new ConcurrentLinkedQueue[JObject]
+  private var open: List[JField] = Nil
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     val tag = Option(e.properties).map(_.getProperty(TagKey)).orNull
@@ -52,33 +54,36 @@ final class Tracer private (spark: SparkSession) extends SparkListener
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = {
     val (t0, tag) = jobStart.getOrDefault(e.jobId, (e.time, null))
-    jobs.add(Json.obj("job" -> e.jobId, "tag" -> tag, "start_ms" -> t0,
-      "end_ms" -> e.time, "ok" -> (e.jobResult == JobSucceeded)))
+    jobs.add(JObject("job" -> JInt(e.jobId), "tag" -> (if (tag == null) JNull else JString(tag)),
+      "start_ms" -> JLong(t0), "end_ms" -> JLong(e.time),
+      "ok" -> JBool(e.jobResult == JobSucceeded)))
   }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
     val m = si.taskMetrics
-    val job: Any = Option(stageJob.get(si.stageId)).orNull
-    val o = Json.obj("stage" -> si.stageId, "attempt" -> si.attemptNumber(),
-      "job" -> job, "tasks" -> si.numTasks,
-      "submit_ms" -> si.submissionTime.getOrElse(0L),
-      "end_ms" -> si.completionTime.getOrElse(0L))
-    if (m != null) {
-      o("run_ms") = m.executorRunTime
-      o("cpu_ns") = m.executorCpuTime
-      o("gc_ms") = m.jvmGCTime
-      o("input_bytes") = m.inputMetrics.bytesRead
-      o("shuffle_read_bytes") = m.shuffleReadMetrics.totalBytesRead
-      o("shuffle_write_bytes") = m.shuffleWriteMetrics.bytesWritten
-      o("spill_bytes") = m.diskBytesSpilled
-      o("output_bytes") = m.outputMetrics.bytesWritten
-      o("output_rows") = m.outputMetrics.recordsWritten
-    }
-    stages.add(o)
+    val job = Option(stageJob.get(si.stageId)).map(j => JInt(j.intValue)).getOrElse(JNull)
+    val base = List[JField]("stage" -> JInt(si.stageId), "attempt" -> JInt(si.attemptNumber()),
+      "job" -> job, "tasks" -> JInt(si.numTasks),
+      "submit_ms" -> JLong(si.submissionTime.getOrElse(0L)),
+      "end_ms" -> JLong(si.completionTime.getOrElse(0L)))
+    val task = if (m == null) Nil else List[JField](
+      "run_ms" -> JLong(m.executorRunTime),
+      "cpu_ns" -> JLong(m.executorCpuTime),
+      "gc_ms" -> JLong(m.jvmGCTime),
+      "input_bytes" -> JLong(m.inputMetrics.bytesRead),
+      "shuffle_read_bytes" -> JLong(m.shuffleReadMetrics.totalBytesRead),
+      "shuffle_write_bytes" -> JLong(m.shuffleWriteMetrics.bytesWritten),
+      "spill_bytes" -> JLong(m.diskBytesSpilled),
+      "output_bytes" -> JLong(m.outputMetrics.bytesWritten),
+      "output_rows" -> JLong(m.outputMetrics.recordsWritten))
+    stages.add(JObject(base ++ task))
   }
 
-  private def describe(func: String, qe: QueryExecution, failed: Boolean): Json.Obj = {
+  /** One action's QueryExecution. `exec_ms` is Spark's own timing of the
+    * action's SQL execution (0 when it failed); the phase times come from
+    * its QueryPlanningTracker. */
+  private def describe(func: String, qe: QueryExecution, execNs: Long, failed: Boolean): JObject = {
     val phases = qe.tracker.phases
     def phase(p: String): Double = phases.get(p).map(_.durationMs.toDouble).getOrElse(0.0)
     val starts = phases.values.map(_.startTimeMs)
@@ -88,30 +93,32 @@ final class Tracer private (spark: SparkSession) extends SparkListener
     val scanRows = collectWithSubqueries(plan) {
       case s: FileSourceScanExec => s.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
     }.sum
-    Json.obj("func" -> func, "failed" -> failed,
-      "analysis_ms" -> phase("analysis"), "optimization_ms" -> phase("optimization"),
-      "planning_ms" -> phase("planning"),
-      "plan_start_ms" -> (if (starts.isEmpty) 0L else starts.min),
-      "plan_end_ms" -> (if (ends.isEmpty) 0L else ends.max),
-      "exchanges" -> count { case _: ShuffleExchangeLike => () },
-      "broadcasts" -> count { case _: BroadcastExchangeLike => () },
-      "cache_scans" -> count { case _: InMemoryTableScanExec => () },
-      "scan_rows" -> scanRows)
+    JObject("func" -> JString(func), "failed" -> JBool(failed),
+      "exec_ms" -> JDouble(execNs / 1e6),
+      "analysis_ms" -> JDouble(phase("analysis")),
+      "optimization_ms" -> JDouble(phase("optimization")),
+      "planning_ms" -> JDouble(phase("planning")),
+      "plan_start_ms" -> JLong(if (starts.isEmpty) 0L else starts.min),
+      "plan_end_ms" -> JLong(if (ends.isEmpty) 0L else ends.max),
+      "exchanges" -> JInt(count { case _: ShuffleExchangeLike => () }),
+      "broadcasts" -> JInt(count { case _: BroadcastExchangeLike => () }),
+      "cache_scans" -> JInt(count { case _: InMemoryTableScanExec => () }),
+      "scan_rows" -> JLong(scanRows))
   }
 
   private val qeListener = new QueryExecutionListener {
     override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-      pendingQes.add(describe(f, qe, failed = false))
+      pendingQes.add(describe(f, qe, ns, failed = false))
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-      pendingQes.add(describe(f, qe, failed = true))
+      pendingQes.add(describe(f, qe, 0L, failed = true))
   }
 
   private val streamListener = new StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      pendingBatches.add(Json.obj("rows" -> e.progress.numInputRows,
-        "batch_ms" -> e.progress.batchDuration))
+      pendingBatches.add(JObject("rows" -> JLong(e.progress.numInputRows),
+        "batch_ms" -> JLong(e.progress.batchDuration)))
   }
 
   /** Block until every posted listener event has been delivered.
@@ -124,42 +131,37 @@ final class Tracer private (spark: SparkSession) extends SparkListener
 
   /** Open the span `tag` on the harness thread. */
   def begin(tag: String): Unit = {
-    open = Json.obj("tag" -> tag, "start_ms" -> nowMs)
+    open = List("tag" -> JString(tag), "start_ms" -> JDouble(nowMs))
     sc.setLocalProperty(TagKey, tag + "|construct")
   }
 
   /** Within the open query span: construction ends, the action starts. */
   def action(tag: String): Unit = {
-    open("action_ms") = nowMs
+    open :+= "action_ms" -> JDouble(nowMs)
     sc.setLocalProperty(TagKey, tag + "|action")
   }
 
-  /** Close the open span, then gather what the bus delivered for it. */
-  def end(into: Json.Obj): Unit = {
-    val o = open
-    o("end_ms") = nowMs
+  /** Close the open span and return it, with what the bus delivered for it. */
+  def end(): JObject = {
+    val endMs = nowMs
     sc.setLocalProperty(TagKey, null)
     drain()
-    def take(q: ConcurrentLinkedQueue[Json.Obj]) = {
-      val a = Json.Arr(); var x = q.poll()
-      while (x != null) { a += x; x = q.poll() }
-      a
-    }
-    o("qes") = take(pendingQes)
-    o("batches") = take(pendingBatches)
+    def take(q: ConcurrentLinkedQueue[JObject]) =
+      JArray(Iterator.continually(q.poll()).takeWhile(_ != null).toList)
     val infos = sc.getRDDStorageInfo.toSeq: @annotation.nowarn("cat=deprecation")
-    o("cache_mem_bytes") = infos.map(_.memSize).sum
-    o("cache_disk_bytes") = infos.map(_.diskSize).sum
-    val parts = new Json.Obj
-    infos.foreach(i => parts(i.id.toString) = i.numCachedPartitions)
-    o("cache_rdds") = parts
-    into("span") = o
+    JObject(open ++ List[JField](
+      "end_ms" -> JDouble(endMs),
+      "qes" -> take(pendingQes),
+      "batches" -> take(pendingBatches),
+      "cache_mem_bytes" -> JLong(infos.map(_.memSize).sum),
+      "cache_disk_bytes" -> JLong(infos.map(_.diskSize).sum),
+      "cache_rdds" -> JObject(infos.map(i => i.id.toString -> JInt(i.numCachedPartitions)).toList)))
   }
 
-  def dump(): Json.Obj = {
+  def dump(): JObject = {
     drain()
-    Json.obj("jobs" -> jobs.asScala.toSeq, "stages" -> stages.asScala.toSeq,
-      "cores" -> sc.defaultParallelism)
+    JObject("jobs" -> JArray(jobs.asScala.toList), "stages" -> JArray(stages.asScala.toList),
+      "cores" -> JInt(sc.defaultParallelism))
   }
 }
 

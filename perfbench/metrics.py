@@ -3,19 +3,25 @@
 Nothing here touches the engine, the file system or the clock, so
 `perfbench/tests/test_metrics.py` covers all of it.
 """
+import math
 import random
 import statistics
 
 MB = 1048576.0
+# the tracer's span clock (nanoTime-derived epoch ms) and Spark's phase
+# clock (whole epoch ms) may disagree by this much
+CLOCK_SLACK_MS = 2
 
 
 # -- seeded inputs -------------------------------------------------------
 
 def pass_orders(queries, seed, workload, n):
-    """`n` query orders for one run: a permutation of the pinned list per
-    pass, fixed by (workload, seed) alone."""
-    rng = random.Random(f"{workload}:{seed}")
-    return [rng.sample(list(queries), len(queries)) for _ in range(n)]
+    """`n` query orders for one run: one permutation of the pinned list,
+    fixed by (workload, seed) alone, for every pass. Each query then runs
+    behind the same queries in every pass, so its walls compare across
+    passes (see `best_pass_s`)."""
+    order = random.Random(f"{workload}:{seed}").sample(list(queries), len(queries))
+    return [list(order) for _ in range(n)]
 
 
 # -- percentiles ---------------------------------------------------------
@@ -98,48 +104,83 @@ def statuses(passes, expected):
 
 # -- end-to-end metrics --------------------------------------------------
 
+def best_pass_s(passes):
+    """The wall of one pass with each query at its fastest: the sum of
+    each query's lowest wall over the passes, plus the least time a pass
+    spent outside its queries. The passes of a run share one order, so a
+    frame one query builds for the next is built in the same place in
+    every pass. A stall of the shared host that hits one query in one
+    pass drops out; a query made slower in every pass does not."""
+    best = {}
+    for p in passes:
+        for q in p["queries"]:
+            if "wall_s" in q:
+                best[q["name"]] = min(best.get(q["name"], q["wall_s"]), q["wall_s"])
+    outside = min(p["wall_s"] - sum(q.get("wall_s", 0.0) for q in p["queries"]) for p in passes)
+    return sum(best.values()) + outside
+
+
 def end_to_end(rec, expected):
     """The untraced run's user-visible metrics, plus the sample counts."""
     st = statuses(rec["passes"], expected)
     ok_walls = [q["wall_s"] for _, q, s in st if s == "ok"]
     failed = sum(1 for _, _, s in st if s != "ok")
     p90 = tail_percentile(ok_walls, 90)
+    heap = [q["heap_mb"] for p in rec["passes"] for q in p["queries"] if "heap_mb" in q]
     return {
-        "batch_s": statistics.median(p["wall_s"] for p in rec["passes"]),
+        "batch_s": best_pass_s(rec["passes"]),
+        "batch_cpu_s": min(p["cpu_s"] for p in rec["passes"]),
         "query_p50_s": statistics.median(ok_walls) if ok_walls else None,
         "query_p90_s": p90,
         "setup_s": rec["setup_s"],
         "failed_frac": failed / len(st) if st else 1.0,
-        "heap_live_mb": min(rec["heap_live_mb"]),
+        "heap_live_peak_mb": max(heap) if heap else None,
     }, {"passes": len(rec["passes"]), "queries": len(st), "failed": failed,
         "latency_samples": len(ok_walls)}
 
 
 # -- per-layer metrics ---------------------------------------------------
 
-def query_layers(span):
-    """Split one query span into construct / plan / action intervals (ms).
+def action_qe(span):
+    """The QueryExecution record of the query's `count` action: the last
+    `count` whose planning started after the action did (compared at
+    whole-ms resolution), or None when the listener delivered none or
+    construction threw before the action."""
+    if "action_ms" not in span:
+        return None
+    t1 = math.floor(span["action_ms"]) - CLOCK_SLACK_MS
+    found = [e for e in span["qes"] if e["func"] == "count" and e["plan_start_ms"] >= t1]
+    return found[-1] if found else None
 
-    construct = inside `fn(spark, d)`; plan = from the `count` call to the
-    end of the count plan's physical planning (QueryPlanningTracker);
-    action = the rest, during which the action's jobs run."""
-    t0, t2 = span["start_ms"], span["end_ms"]
-    t1 = span.get("action_ms", t2)
-    ends = [min(q["plan_end_ms"], t2) for q in span["qes"]
-            if q["func"] == "count" and q["plan_start_ms"] >= t1]
-    p1 = max([t1] + ends)
-    return {"construct": (t0, t1), "plan": (t1, p1), "action": (p1, t2)}
+
+def query_layers(q):
+    """Seconds of construct / plan / action for one traced query, each from
+    its own clock, or None when its `count` action was not observed.
+
+    construct = the harness's timing of `fn(spark, d)`; plan = the count's
+    QueryPlanningTracker phases (analysis, optimization, planning); action
+    = Spark's timing of the count's SQL execution, less the optimization
+    and planning that run inside it."""
+    e = action_qe(q["span"])
+    if e is None:
+        return None
+    inside = e["optimization_ms"] + e["planning_ms"]
+    return {"construct": q["construct_s"],
+            "plan": (e["analysis_ms"] + inside) / 1000.0,
+            "action": (e["exec_ms"] - inside) / 1000.0}
 
 
 def tiling_errors(rec, tolerance=0.05):
-    """Timed queries whose construct + plan + action do not add up to the
-    measured wall within `tolerance` of it."""
+    """Traced queries whose separately measured construct + plan + action
+    miss the measured wall by more than `tolerance` of it, as (name,
+    layer sum or None when the count action was not observed, wall)."""
     bad = []
     for p in rec["passes"]:
         for q in p["queries"]:
             if "span" in q and not q.get("error"):
-                tiled = sum(b - a for a, b in query_layers(q["span"]).values()) / 1000.0
-                if abs(tiled - q["wall_s"]) > tolerance * q["wall_s"]:
+                lay = query_layers(q)
+                tiled = None if lay is None else sum(lay.values())
+                if tiled is None or abs(tiled - q["wall_s"]) > tolerance * q["wall_s"]:
                     bad.append((q["name"], tiled, q["wall_s"]))
     return bad
 
@@ -205,15 +246,16 @@ def layer_metrics(rec, modules, module_names, publishers):
             if "span" not in q:
                 continue
             sp = q["span"]
-            lay = query_layers(sp)
-            c = (lay["construct"][1] - lay["construct"][0]) / 1000.0
+            lay = query_layers(q)
+            c = q.get("construct_s", q["wall_s"])
             construct_s += c
             mod = modules.get(q["name"])
             construct[mod] = construct.get(mod, 0.0) + c
             mine = _jobs_in(sp, jobs)
             per_query.append(len(mine))
             construct_jobs += sum(1 for j in mine if j["tag"].endswith("|construct"))
-            act = (lay["plan"][0], sp["end_ms"])
+            a = lay["action"] if lay else (sp["end_ms"] - sp.get("action_ms", sp["end_ms"])) / 1000.0
+            act = (sp["end_ms"] - 1000.0 * a, sp["end_ms"])
             action_s += (act[1] - act[0]) / 1000.0
             gap_s += self_time(act, [(j["start_ms"], j["end_ms"]) for j in mine
                                      if j["tag"].endswith("|action")]) / 1000.0
@@ -261,6 +303,35 @@ def layer_metrics(rec, modules, module_names, publishers):
     m["stream.input_rows"] = sum(b["rows"] for b in batches)
     m["stream.batch_s"] = sum(b["batch_ms"] for b in batches) / 1000.0
     return m
+
+
+def traffic_mix(rec, modules, names=None):
+    """What kind of work a query list is, from one traced run's timed
+    passes (only the queries in `names`, when given): the construct /
+    plan / action shares of query wall, jobs per query, the single-task
+    share of stages, executor busy fraction and the share of action wall
+    with no job running. `report.py --full` compares a workload's pinned
+    list with its full list on these."""
+    if names is not None:
+        rec = dict(rec, passes=[dict(p, queries=[q for q in p["queries"] if q["name"] in names])
+                                for p in rec["passes"]])
+    lays = [query_layers(q) for p in rec["passes"] for q in p["queries"]
+            if "span" in q and not q.get("error")]
+    lays = [x for x in lays if x]
+    total = sum(sum(x.values()) for x in lays) or 1.0
+    m = layer_metrics(rec, modules, [], [])
+    jobs = [n for _, n in jobs_per_query(rec, rec["passes"])]
+    action = sum(x["action"] for x in lays) or 1.0
+    npass = max(1, len(rec["passes"]))
+    return {"construct_share": sum(x["construct"] for x in lays) / total,
+            "plan_share": sum(x["plan"] for x in lays) / total,
+            "action_share": sum(x["action"] for x in lays) / total,
+            "jobs_per_query_p50": statistics.median(jobs) if jobs else 0,
+            "jobs_per_query_mean": statistics.mean(jobs) if jobs else 0,
+            "single_task_stage_share": m["sched.single_task_stages"] / m["sched.stages"]
+            if m["sched.stages"] else 0.0,
+            "busy_frac": m["exec.busy_frac"],
+            "driver_gap_share": m["sched.driver_gap_s"] * npass / action}
 
 
 def cache_metrics(passes, scans, npass):

@@ -43,9 +43,10 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")]
 JVM_TIMEOUT_S = 170
 HEAP = "4g"
-# timed passes a run makes at least (more while they fit in --seconds);
-# the traced run makes exactly this many
-MIN_PASSES = 3
+# a traced run makes exactly this many timed passes; an untraced run
+# makes at least its workload's `min_passes` (more while they fit in
+# --seconds)
+TRACED_PASSES = 2
 
 
 def log(msg):
@@ -137,24 +138,24 @@ def published_files(work):
                if f.is_file() and not f.name.startswith((".", "_")))
 
 
-def run_jvm(classpath, workload, seed, seconds, trace, queries=None, min_passes=MIN_PASSES,
+def run_jvm(classpath, workload, seed, seconds, trace, queries=None, min_passes=None,
             audit=False, timeout=JVM_TIMEOUT_S):
     """One harness JVM; returns its raw record."""
     w = CONFIG["workloads"][workload]
+    min_passes = min_passes or (TRACED_PASSES if trace else w["min_passes"])
     queries = queries or w["queries"]
     source = corpus_dir()
     work = BUILD / "runs" / f"{workload}_{os.getpid()}_{time.time_ns()}"
     (work / "tmp").mkdir(parents=True)
-    plan = [f"cores={len(os.sched_getaffinity(0))}", f"seconds={seconds}",
-            f"trace={trace}", f"source={source}", f"work={work}",
-            f"publishers={','.join(w['publishers'])}", f"min_passes={min_passes}",
-            f"audit={int(audit)}"]
     n = 1 + (min_passes if trace else 64)
-    plan += ["pass=" + ",".join(o) for o in metrics.pass_orders(queries, seed, workload, n)]
-    (work / "plan.txt").write_text("\n".join(plan) + "\n")
+    plan = {"cores": len(os.sched_getaffinity(0)), "seconds": seconds, "trace": trace,
+            "source": str(source), "work": str(work), "publishers": w["publishers"],
+            "min_passes": min_passes, "audit": audit,
+            "passes": metrics.pass_orders(queries, seed, workload, n)}
+    (work / "plan.json").write_text(json.dumps(plan))
     cmd = (["java", *ADD_OPENS, f"-Xmx{HEAP}", "-XX:+UseG1GC",
             f"-Djava.io.tmpdir={work / 'tmp'}",
-            "-cp", classpath, "graftbench.Harness", str(work / "plan.txt"), str(work / "result.json")])
+            "-cp", classpath, "graftbench.Harness", str(work / "plan.json"), str(work / "result.json")])
     proc = None
     try:
         with open(work / "jvm.log", "w") as out:
@@ -218,7 +219,10 @@ def summarize(workload, rec, trace):
         ms = metrics.layer_metrics(rec, CONFIG["modules"], module_names(), sorted(names))
         for name, tiled, wall in metrics.tiling_errors(rec):
             correct = False
-            print(f"  tiling: {name} construct+plan+action {tiled:.4f} s vs wall {wall:.4f} s")
+            if tiled is None:
+                print(f"  tiling: {name}: no QueryExecution observed for its count action")
+            else:
+                print(f"  tiling: {name} construct+plan+action {tiled:.4f} s vs wall {wall:.4f} s")
         if "followup" in rec:
             jobs, rows = metrics.publish_work(rec, rec["followup"])
             print(f"  follow-up prepareFixtures after the audit: {jobs} jobs, {rows} rows written")
@@ -228,8 +232,10 @@ def summarize(workload, rec, trace):
         spec = SPEC["per_layer"]
     else:
         ms = e2e
-        print(f"  heap samples (MB): {[round(h, 1) for h in rec['heap_live_mb']]}")
+        heap = [round(q["heap_mb"], 1) for q in rec["passes"][0]["queries"] if "heap_mb" in q]
+        print(f"  heap after each query of the first pass (MB): {heap}")
         print(f"  pass walls (s): {[round(p['wall_s'], 3) for p in rec['passes']]}")
+        print(f"  pass CPU times (s): {[round(p['cpu_s'], 3) for p in rec['passes']]}")
         walls = {}
         for p in rec["passes"]:
             for q in p["queries"]:
