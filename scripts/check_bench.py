@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare a Bench JSON record against the committed per-query reference
-band (BASELINE_QUERIES.json) and print per-query FLAGS plus the
-median-ratio loaded-host detector; flags become attributable only via
+band (BASELINE_QUERIES.json) and print per-query FLAGS, every query the
+record names in `failed`, and the median-ratio loaded-host detector; flags become attributable only via
 the re-run adjudication protocol (BASELINE.md).
 
 Usage:
@@ -31,12 +31,13 @@ def main() -> int:
         rec = json.loads(f.read().strip().splitlines()[-1])
 
     refs = ref["queries_sec"]
+    # Bench names every query that threw in `failed`; its entry in
+    # `queries` is the time to the failure, not a result
+    failed = sorted(rec.get("failed", []))
     got = rec["queries"]
+    timed = {n: sec for n, sec in got.items() if n not in failed}
     flagged, ratio_trips, new = [], 0, []
-    for name, sec in sorted(got.items()):
-        if sec < 0:
-            flagged.append((name, sec, refs.get(name), "FAILED (negative time)"))
-            continue
+    for name, sec in sorted(timed.items()):
         r = refs.get(name)
         if r is None:
             new.append((name, sec))
@@ -46,13 +47,13 @@ def main() -> int:
         if sec > max(3.0 * r, r + 1.0):
             flagged.append((name, sec, r, f"{sec / r:.1f}x reference"))
 
-    compared = sum(1 for n in got if n in refs)
+    compared = sum(1 for n in timed if n in refs)
     uniform = compared > 0 and ratio_trips > 0.8 * compared
     # the loaded-host detector the adjudication protocol actually uses
     # (BASELINE.md r17-r18): a calm run reads ~1.0, and flags on a run
     # reading >=1.25 rotate between runs instead of reproducing
-    ratios = sorted(sec / refs[n] for n, sec in got.items()
-                    if n in refs and refs[n] > 0 and sec >= 0)
+    ratios = sorted(sec / refs[n] for n, sec in timed.items()
+                    if n in refs and refs[n] > 0)
     median_ratio = ratios[len(ratios) // 2] if ratios else 0.0
     # gate_total_sec is 2x the r1-final 64-query baseline (gate_note);
     # print it SCALED to the measured inventory so the line reads
@@ -69,10 +70,12 @@ def main() -> int:
     for name, sec in new:
         print(f"  NEW   {name}: {sec:.2f} s (no reference yet -- append one "
               "after two clean runs)")
+    for name in failed:
+        print(f"  FAILED {name}: the query threw (see the [bench] stderr line)")
     if uniform:
         print(f"HOST VARIANCE: {ratio_trips}/{compared} queries exceed 3x "
               "uniformly -- re-run on an idle host before chasing regressions")
-        return 0
+        return 1 if failed else 0
     for name, sec, r, why in flagged:
         print(f"  FLAG {name}: {sec:.2f} s vs reference {r} s ({why})")
     if flagged:
@@ -83,9 +86,9 @@ def main() -> int:
               + (f" (this run's median ratio {median_ratio:.2f} says "
                  "loaded -- re-run before chasing)"
                  if median_ratio >= 1.25 else ""))
-    else:
+    elif not failed:
         print("0 flags")
-    return 1 if flagged else 0
+    return 1 if flagged or failed else 0
 
 
 if __name__ == "__main__":

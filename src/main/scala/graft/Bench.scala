@@ -68,18 +68,28 @@ object Bench {
     SparkEntry.prepareFixtures(spark, sfDir)
     System.err.println(
       f"[bench] fixture publish (untimed): ${(System.nanoTime() - s0) / 1e9}%.1f s")
+    // a query that throws keeps its time-to-failure in `queries` (the
+    // keys stay stable) and is named in the additive `failed` list
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = picked.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val err = try { fn(spark, sfDir).count(); None }
+                catch { case e: Throwable => Some(e) }
       val dt = (System.nanoTime() - t0) / 1e9
+      err.foreach { e =>
+        failed += name
+        System.err.println(
+          s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      }
       if (storageReport.isDefined) pollStorage()
       name -> dt
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // The driver's BENCH artifact preserves only the LAST ~2000 chars of
     // stdout, so with 264 queries the full per-query line above gets its
@@ -98,7 +108,7 @@ object Bench {
     // Carries the driver's metric/value/unit keys too, so the record
     // stays parseable whether the driver reads the first or last line.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_s":${num("%.2f", total)},"n":${results.size},"slowest":$slowest,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_s":${num("%.2f", total)},"n":${results.size},"slowest":$slowest,"failed":$failedJson,"sf":"$sfDir"}"""
     println(summary)
     // … and to stderr (r19, the r18 verdict ask #9): the r17 driver
     // capture truncated the stdout per-query line at 2000 chars and the

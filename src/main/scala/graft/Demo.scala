@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{IngestOps, ReportOps}
 import graft.operators.ReportOps.{Metric, ReportSpec}
@@ -17,12 +16,7 @@ object Demo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val sink = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_demo").toString) + "/events_sink"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val events = Tables.events(spark, sfDir)

@@ -2,12 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE session configuration — one builder shared by [[Bench]],
-  * [[Verify]], and the test suite's `TestBase`, so the plans the
-  * DuckDB oracle verifies and the plans `PlanSpec` guards are the
-  * SAME plans the benchmark times (r8 advice: a 10–32 MB join side
-  * must not take a broadcast shape in bench and a shuffle shape in
-  * verify).
+/** THE session configuration — one builder shared by every entry
+  * point: [[Bench]], [[Verify]], [[PlanDump]], `PlanAudit`, [[Profile]],
+  * [[ScaleCounts]], [[Demo]], the benchmark harness and the test
+  * suite's `TestBase` — so the plans the DuckDB oracle verifies and the
+  * plans `PlanSpec` guards are the SAME plans the benchmark times (r8
+  * advice: a 10–32 MB join side must not take a broadcast shape in
+  * bench and a shuffle shape in verify).
+  *
+  * It also installs the engine's session-wide hooks, once per session:
+  *
+  *  - [[graft.plans.GraftExtensions]] — injects all ten custom SQL
+  *    functions, so no operator registers a function per query.
+  *  - [[SignalsListener]] via `spark.sql.queryExecutionListeners` —
+  *    logs the embcos occupancy-cap warning (see [[Signals]]).
   *
   * The knobs and why they are production-standard, result-invariant
   * session tuning (not bench-only tricks):
@@ -65,4 +73,7 @@ object GraftSession {
       // in Iter.cut itself.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.queryExecutionListeners",
+        classOf[SignalsListener].getName)
+      .withExtensions(new graft.plans.GraftExtensions)
 }

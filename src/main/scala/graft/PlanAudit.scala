@@ -1,5 +1,3 @@
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit tool: prints, per query, the exchange/join-shape
   * summary used in the per-round "plan you'd want at 100×" review
   * (shuffle count, broadcast vs sort-merge joins, cartesian products,
@@ -28,10 +26,7 @@ object PlanAudit {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // Artifact header (r16 ADVICE): the counting method changed in r16
     // — operator counts now come from the FORMATTED explain and so no
@@ -50,6 +45,9 @@ object PlanAudit {
       "queries are counting visibility, not new shuffles (A/B timings " +
       "are the ground truth); decreases are genuine cache-sharing " +
       "collapses.")
+    println("# session=GraftSession: plans are the ones Bench times " +
+      "(32 MB broadcast ceiling, 4 MB advisory partitions). Artifacts up " +
+      "to PLAN_AUDIT_r18 audited a plain session (10 MB broadcast).")
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(s, d)
       df.collect() // materialize: AQE finalizes stages, codegen ids exist

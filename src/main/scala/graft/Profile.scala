@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiler: time named queries with warm repeats, optionally
   * print the formatted plan. Usage:
   *   sbt "runMain graft.Profile q_dedup_minhash q_dedup_exact"
@@ -10,13 +8,6 @@ import org.apache.spark.sql.SparkSession
   *      (per-rep task-metric totals: GC, spill, shuffle — the
   *      stage-attribution tool the r17 scale follow-up asked for when
   *      a time exponent disagrees with counted work).
-  *
-  * Deliberately a PLAIN SparkSession, not [[GraftSession]]: every
-  * committed probe number since the width-pin crossover measurements
-  * (isolated decade exponents, the embcos warm min-of-N series, the
-  * r18 stage attributions) was taken in this env, and decade-to-decade
-  * comparisons only mean something when both decades run the same
-  * config. Bench-env questions belong to Bench (SPARK_GRAFT_ONLY).
   *
   * Results are also written to /tmp/graft_profile.json (atomic
   * tmp+rename, the Bench pattern): `sbt --error` suppresses the
@@ -29,12 +20,7 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val taskMetrics = sys.env.get("SPARK_GRAFT_TASK_METRICS").contains("1")
     // SPARK_GRAFT_JOB_TRACE=1 — print every Spark job with its wall

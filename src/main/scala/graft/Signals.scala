@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.slf4j.LoggerFactory
@@ -9,8 +8,8 @@ import org.slf4j.LoggerFactory
   * the embcos occupancy cap): operators attach a `Dataset.observe`
   * (a `CollectMetrics` node — zero extra jobs, metrics ride the
   * action's own task accumulators) to the frame whose non-emptiness
-  * signals the trade, and the session-level [[QueryExecutionListener]]
-  * registered here LOGS a warning whenever such a metric fires.
+  * signals the trade, and the session-level [[SignalsListener]] LOGS
+  * a warning whenever such a metric fires.
   *
   * Why a log and not only the metric: the cap's recall trade
   * (a true pair in a split cell survives candidate generation with
@@ -20,8 +19,6 @@ import org.slf4j.LoggerFactory
   * keeps it machine-readable (`qe.observedMetrics`) for harnesses.
   */
 object Signals {
-  private val log = LoggerFactory.getLogger(getClass)
-
   /** Observed-metric name prefix for embcos occupancy-cap activation.
     * The metric row is (capped_cells: long, max_sub_lanes: int). */
   val EmbcosOccCap = "graft_embcos_occ_cap"
@@ -38,36 +35,29 @@ object Signals {
     * explicitly allowed by the analyzer. */
   def metricName(prefix: String, variant: String): String =
     s"${prefix}_$variant"
+}
 
-  // WeakHashMap-keyed (r17 ADVICE): a strong set would pin every
-  // session that ever ran an embcos query for the JVM's life. The
-  // listener itself is owned by the session's listenerManager, so a
-  // collected session takes its listener with it.
-  private val registered =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
+/** The warn-on-activation listener for [[Signals]]. [[GraftSession]]
+  * installs it once per session through
+  * `spark.sql.queryExecutionListeners`, which instantiates it by class
+  * name — hence a named class with a no-arg constructor. */
+class SignalsListener extends QueryExecutionListener {
+  private val log = LoggerFactory.getLogger(classOf[SignalsListener])
 
-  /** Register the warn-on-activation listener once per session.
-    * Idempotent and cheap — operators call it at plan-build time. */
-  def ensureListener(spark: SparkSession): Unit =
-    if (registered.add(spark)) {
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-                               durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(EmbcosOccCap) &&
-                !row.isNullAt(0) && row.getLong(0) > 0L)
-              log.warn(
-                s"embcos occupancy cap ACTIVE: ${row.getLong(0)} " +
-                  s"(label, table, bucket) cell(s) split over up to " +
-                  s"${row.get(1)} sub-lanes — candidate recall for pairs " +
-                  "inside split cells drops to p = 1-(1-1/k)^L per pair; " +
-                  "a corpus that triggers this at scale should route to " +
-                  "the IVF path (q_similarity_ivf)")
-          }
-        override def onFailure(funcName: String, qe: QueryExecution,
-                               exception: Exception): Unit = ()
-      })
+  override def onSuccess(funcName: String, qe: QueryExecution,
+                         durationNs: Long): Unit =
+    qe.observedMetrics.foreach { case (name, row) =>
+      if (name.startsWith(Signals.EmbcosOccCap) &&
+          !row.isNullAt(0) && row.getLong(0) > 0L)
+        log.warn(
+          s"embcos occupancy cap ACTIVE: ${row.getLong(0)} " +
+            s"(label, table, bucket) cell(s) split over up to " +
+            s"${row.get(1)} sub-lanes — candidate recall for pairs " +
+            "inside split cells drops to p = 1-(1-1/k)^L per pair; " +
+            "a corpus that triggers this at scale should route to " +
+            "the IVF path (q_similarity_ivf)")
     }
+
+  override def onFailure(funcName: String, qe: QueryExecution,
+                         exception: Exception): Unit = ()
 }

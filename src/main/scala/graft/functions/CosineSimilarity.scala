@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,14 +76,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim` in the session's function registry (callable
-    * from SQL and via functions.call_function). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -195,12 +194,4 @@ case class DistBucket(children: Seq[Expression]) extends Expression {
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): DistBucket =
     copy(children = newChildren)
-}
-
-object DistBucket {
-  /** Register `dist_bucket` in the session's function registry
-    * (callable via functions.call_function). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dist_bucket", exprs => DistBucket(exprs), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -105,10 +104,22 @@ case class DistFold(children: Seq[Expression])
         else {
           val longFields = st.fields(g + 1) +:
             (0 until c).map(i => st.fields(g + 2 + i))
+          // group keys and maxes go through cmpVals' Comparable cast,
+          // which these types would fail inside a task
+          val unordered = ((0 until g) ++ (g + 2 + c until st.length))
+            .map(st.fields(_)).find(_.dataType match {
+              case BinaryType | _: ArrayType | _: MapType | _: StructType => true
+              case _ => false
+            })
           if (longFields.exists(_.dataType != LongType))
             TypeCheckResult.TypeCheckFailure(
               "dist_fold cnt/cum fields must be long")
-          else TypeCheckResult.TypeCheckSuccess
+          else unordered match {
+            case Some(f) => TypeCheckResult.TypeCheckFailure(
+              s"dist_fold group-key/max field `${f.name}` has type " +
+                s"${f.dataType.simpleString}, which has no natural ordering")
+            case None => TypeCheckResult.TypeCheckSuccess
+          }
         }
       case other => TypeCheckResult.TypeCheckFailure(
         s"dist_fold arr must be array<struct>, got ${other.simpleString}")
@@ -215,12 +226,4 @@ case class DistFold(children: Seq[Expression])
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): DistFold =
     copy(children = newChildren)
-}
-
-object DistFold {
-  /** Register `dist_fold` in the session's function registry
-    * (callable via functions.call_function). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dist_fold", exprs => DistFold(exprs), "built-in")
 }

@@ -297,7 +297,6 @@ object Dist {
             cmpCol(keys)(element_at(col("__dp_raw"),
               greatest(i, lit(1))), x) =!= 0)
         .as("__dp_cuts"))
-    DistBucket.register(df.sparkSession)
     val spec = keys.map(k =>
       s"${if (k.asc) "a" else "d"}${if (k.nullsFirst) "f" else "l"}")
       .mkString(",")
@@ -342,7 +341,6 @@ object Dist {
 
     val sameGroup = (l: String, r: String) =>
       part.foldLeft(lit(true))((c, k) => c && col(s"$l.$k") <=> col(s"$r.$k"))
-    DistFold.register(df.sparkSession)
     // Read the fold's generically-named entry fields back into the
     // tier's offset columns. Bind the subquery value to ONE column and
     // read fields from it: a fresh reference per withColumn would

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -232,19 +231,4 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): IntersectSizeSorted = copy(l, r)
-}
-
-object TextHashExprs {
-  /** Register the text-hash expressions in the session registry. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hashes", exprs => NgramHashes(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_md5_ngram", exprs => MinMd5Ngram(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_size_sorted",
-      exprs => IntersectSizeSorted(exprs.head, exprs(1)), "built-in")
-  }
 }

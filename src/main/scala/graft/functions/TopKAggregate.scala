@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -133,17 +132,4 @@ case class TopKPairs(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(value = newChildren(0), id = newChildren(1), kExpr = newChildren(2))
-}
-
-object TopKAggregate {
-  /** Register top_k_pairs in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_pairs",
-      { exprs =>
-        require(exprs.length == 3,
-          s"top_k_pairs(value, id, k) takes 3 arguments, got ${exprs.length}")
-        TopKPairs(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
 }

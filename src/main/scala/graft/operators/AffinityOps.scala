@@ -147,7 +147,6 @@ object AffinityOps {
     * inference); production callers use [[simJoinPrefix]]. */
   private[graft] def simJoinParts(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.TextHashExprs.register(s)
     // the distinct token frame feeds FOUR subtrees (sizes, dfs, prefix
     // rows, verification arrays) — persist() computes the
     // explode+distinct once instead of four times (the ivf2 pattern);

@@ -288,7 +288,6 @@ object CurationOps {
     * collision-free in practice (odds ~n²/2⁶⁴), same contract as
     * q_dedup_ngram. */
   def contamination(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextHashExprs.register(s)
     val docs = Tables.documents(s, d)
     // exchange barrier: both the benchmark and corpus branches read the
     // materialized gram arrays instead of re-running the HOF per branch
@@ -860,7 +859,6 @@ object CurationOps {
     * negation is exact below 2⁵³), ties broken by smaller doc_id
     * identically in both engines. */
   def sampleQuota(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long")
     ord(
@@ -894,7 +892,6 @@ object CurationOps {
     * ranks at the cut). Same bounded top_k_pairs shape as sampleQuota:
     * ≤ k rows per language per map task, no stratum ever sorted. */
   def sampleWeighted(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long")
     val pri = (h.cast("double") + lit(0.5)) / lit(4294967296.0) /

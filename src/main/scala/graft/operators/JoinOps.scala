@@ -306,7 +306,6 @@ object JoinOps {
     * never the keys), sized from the measured dim count at
     * [[BloomBitsPerKey]] bits/key and clamped to [[BloomMaxBits]]. */
   def joinBloom(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BloomExprs.register(s)
     val urgent = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))

@@ -100,7 +100,6 @@ object LlmOps {
     * Catalyst's projection collapse cannot inline it into every band
     * reference (measured 25× slowdown without it at sf0.01). */
   def dedupMinhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextHashExprs.register(s)
     val docs = Tables.documents(s, d)
     val mh = docs
       .select(col("doc_id"), call_function("minhash_sig", col("text")).as("mh"))
@@ -196,7 +195,6 @@ object LlmOps {
     // the shuffle output is REUSED by both self-join branches + the size
     // lookups (ReuseExchange) — without it every branch re-derives the
     // ngrams from raw text (measured ~4× the work at sf0.1).
-    graft.functions.TextHashExprs.register(s)
     val ng = docs.select(col("doc_id"), col("lang"), col("source"),
         // distinct 8-byte ngram hashes from the single-pass NgramHashes
         // expression (collision odds ~n²/2⁶⁴ — immaterial; deterministic)
@@ -258,10 +256,8 @@ object LlmOps {
   /** Codegen'd single-pass cosine (graft.functions.CosineSimilarity) —
     * used on every O(pairs) similarity join; bit-compatible with the
     * HOF/oracle formulation. */
-  private def cosineFast(s: SparkSession, a: Column, b: Column): Column = {
-    graft.functions.CosineSimilarity.register(s)
+  private def cosineFast(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-  }
 
   /** q_dedup_embcos — embedding-cosine near-duplicate pairs within each
     * label block; global top-20 most-similar candidate pairs.
@@ -493,7 +489,6 @@ object LlmOps {
       .observe(Signals.metricName(Signals.EmbcosOccCap, variant),
         count(lit(1)).as("capped_cells"),
         coalesce(max(col("__occ_k")), lit(0)).as("max_sub_lanes"))
-    Signals.ensureListener(s)
     val bkSub = bk.join(broadcast(heavy), Seq("label", "t", "bucket"), "left")
       .withColumn("sub",
         when(col("__occ_k").isNull, lit(0L))
@@ -520,7 +515,7 @@ object LlmOps {
     val e2 = em0.select(col("vec_id").as("v2"), col("v").as("vb"))
     cand.join(e1, "v1").join(e2, "v2")
       .select(col("label"), col("v1"), col("v2"),
-              r4(cosineFast(s, col("va"), col("vb"))).as("sim"))
+              r4(cosineFast(col("va"), col("vb"))).as("sim"))
       .orderBy(col("sim").desc, col("v1"), col("v2"))
       .limit(20)
   }
@@ -664,7 +659,7 @@ object LlmOps {
           (col("ci") < col("cj") || col("v1") < col("v2")))
       .select(least(col("v1"), col("v2")).as("d1"),
               greatest(col("v1"), col("v2")).as("d2"),
-              cosineFast(s, col("va"), col("vb")).as("raw"))
+              cosineFast(col("va"), col("vb")).as("raw"))
       // cheap raw-cosine prefilter ahead of r4's per-value BigDecimal
       // (the measured hot loop at 100x): r4(x) >= θ implies
       // x >= θ − 5e-5, so θ − 1e-4 is conservatively inclusive and
@@ -729,8 +724,7 @@ object LlmOps {
     * and nothing is sorted — the window row_number form shuffles + sorts
     * every candidate. Preference (sim DESC, n_id ASC) matches the
     * oracles' row_number ordering exactly. */
-  private[operators] def rerankTopK(s: SparkSession, cands: DataFrame, k: Int): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
+  private[operators] def rerankTopK(cands: DataFrame, k: Int): DataFrame = {
     cands.groupBy(col("q_id"))
       .agg(call_function("top_k_pairs", col("sim"), col("n_id"), lit(k)).as("tk"))
       .select(col("q_id"), posexplode(col("tk")).as(Seq("pos", "e")))
@@ -748,8 +742,8 @@ object LlmOps {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val j = em.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    ord(rerankTopK(s, j, 5), col("q_id"), col("rn"))
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    ord(rerankTopK(j, 5), col("q_id"), col("rn"))
   }
 
   /** q_knn_classify — k-NN label prediction (k=3): each query vector is
@@ -772,8 +766,8 @@ object LlmOps {
               col("v").as("qv"))
     val j = em.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    val top = rerankTopK(s, j, 3)
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    val top = rerankTopK(j, 3)
     val votes = em.select(col("vec_id").as("n_id"), col("label"))
       .join(broadcast(top), "n_id")
       .groupBy(col("q_id"), col("label")).agg(count(lit(1)).as("cnt"))
@@ -844,8 +838,8 @@ object LlmOps {
     val j = cand.join(em, cand("n_id") === em("vec_id"))
       .join(broadcast(qv), col("q_id") === col("q_id2"))
       .select(col("q_id"), col("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    ord(rerankTopK(s, j, 3), col("q_id"), col("rn"))
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    ord(rerankTopK(j, 3), col("q_id"), col("rn"))
   }
 
   /** q_ann_recall — the index-quality eval every ANN deployment ships:
@@ -936,15 +930,14 @@ object LlmOps {
     * argmax makes the assignment invariant to cross-engine /
     * cross-partitioning float-sum order — ties break on c_id, never on
     * the 1e-16 tail of a dot product. */
-  private def assignCells(s: SparkSession, em: DataFrame, cent: DataFrame): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
+  private def assignCells(em: DataFrame, cent: DataFrame): DataFrame = {
     // v rides through the aggregate via first() — every row of a vec_id
     // group carries the identical vector, so first() is deterministic
     // here and saves the join-back shuffle that regaining v would cost
     // (one shuffle per assignment pass instead of two)
     em.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("v"), col("c_id"),
-              r4(cosineFast(s, col("v"), col("cv"))).as("csim"))
+              r4(cosineFast(col("v"), col("cv"))).as("csim"))
       .groupBy(col("vec_id"))
       .agg(call_function("top_k_pairs", col("csim"), col("c_id"), lit(1)).as("tk"),
            first(col("v")).as("v"))
@@ -1024,9 +1017,9 @@ object LlmOps {
         // hold): without it every downstream consumer would re-run the
         // whole assign+mean lineage, tripling the passes over em.
         val cent = (1 to IvfLloydIters).foldLeft(cent0) { (c, _) =>
-          lloydStep(assignCells(s, em, c)).iterCut(true)
+          lloydStep(assignCells(em, c)).iterCut(true)
         }
-        assignCells(s, em, cent).write.parquet(s"$tmp/assigned")
+        assignCells(em, cent).write.parquet(s"$tmp/assigned")
         cent.write.parquet(s"$tmp/cent")
         markSuccess(s, tmp)
     }
@@ -1048,7 +1041,6 @@ object LlmOps {
     // cell IS the query's assigned cell — read it off `assigned` rather
     // than re-running the argmax pass. The index carries the vectors,
     // so multi-probe scoring and the re-rank never touch the source.
-    graft.functions.TopKAggregate.register(s)
     val qcells =
       if (nprobe == 1)
         assigned.filter(col("vec_id") < 10)
@@ -1057,7 +1049,7 @@ object LlmOps {
         assigned.filter(col("vec_id") < 10).select(col("vec_id"), col("v"))
           .crossJoin(broadcast(cent))
           .select(col("vec_id"), col("c_id"),
-                  r4(cosineFast(s, col("v"), col("cv"))).as("csim"))
+                  r4(cosineFast(col("v"), col("cv"))).as("csim"))
           .groupBy(col("vec_id"))
           .agg(call_function("top_k_pairs", col("csim"), col("c_id"), lit(nprobe)).as("tk"))
           .select(col("vec_id").as("q_id"), explode(col("tk")).as("e"))
@@ -1068,8 +1060,8 @@ object LlmOps {
         col("c_id") === col("qc") && col("vec_id") =!= col("q_id"))
       .join(broadcast(qv), col("q_id") === col("q_id2"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    ord(rerankTopK(s, j, 3), col("q_id"), col("rn"))
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    ord(rerankTopK(j, 3), col("q_id"), col("rn"))
   }
 
   /** q_embedding_pq — product quantization, the standard embedding
@@ -1107,11 +1099,10 @@ object LlmOps {
     * the smaller c_id — the engine-wide determinism rule) and cs is the
     * winning rounded similarity. One linear pass: broadcast codebook
     * join + bounded k=1 aggregate, no windows. */
-  private[graft] def pqEncode(s: SparkSession, sub: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
+  private[graft] def pqEncode(sub: DataFrame, cb: DataFrame): DataFrame = {
     sub.join(broadcast(cb), col("sp") === col("csp"))
       .select(col("vec_id"), col("sp"), col("c_id"),
-              r4(cosineFast(s, col("sv"), col("cv"))).as("cs"))
+              r4(cosineFast(col("sv"), col("cv"))).as("cs"))
       .groupBy(col("vec_id"), col("sp"))
       .agg(call_function("top_k_pairs", col("cs"), col("c_id"), lit(1)).as("tk"))
       .select(col("vec_id"), col("sp"),
@@ -1138,7 +1129,7 @@ object LlmOps {
           .iterCut(true)
         val sub = pqSub(em)
         val cb = pqCodebook(sub)
-        pqEncode(s, sub, cb).write.parquet(s"$tmp/codes")
+        pqEncode(sub, cb).write.parquet(s"$tmp/codes")
         cb.write.parquet(s"$tmp/cb")
         markSuccess(s, tmp)
     }
@@ -1207,14 +1198,13 @@ object LlmOps {
       .join(broadcast(cb), col("sp") === col("csp"))
       .select(col("vec_id").as("q_id"), col("sp").as("lsp"),
               col("c_id").as("lcode"),
-              r4(cosineFast(s, col("sv"), col("cv"))).as("ls"))
+              r4(cosineFast(col("sv"), col("cv"))).as("ls"))
     val adc = enc.join(broadcast(lut),
         col("sp") === col("lsp") && col("code") === col("lcode"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       // sum of four 4-decimal LUT entries: exact 4-decimal, order-safe
       .agg(r4(sum(col("ls"))).as("adc"))
-    graft.functions.TopKAggregate.register(s)
     val cand = adc.groupBy(col("q_id"))
       .agg(call_function("top_k_pairs", col("adc"), col("vec_id"),
         lit(PqCandidates)).as("tk"))
@@ -1225,8 +1215,8 @@ object LlmOps {
     val j = cand.join(em, cand("n_id") === em("vec_id"))
       .join(broadcast(qv), col("q_id") === col("q_id2"))
       .select(col("q_id"), col("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    ord(rerankTopK(s, j, 3), col("q_id"), col("rn"))
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    ord(rerankTopK(j, 3), col("q_id"), col("rn"))
   }
 
   /** q_similarity_ivfpq — the composed production ANN index (the
@@ -1252,13 +1242,12 @@ object LlmOps {
     val codes = s.read.parquet(s"$pq/codes")
       .select(col("vec_id"), col("sp"), col("code"))
     val cb = s.read.parquet(s"$pq/cb")
-    graft.functions.TopKAggregate.register(s)
     // each query probes its 2 nearest IVF cells (the measured-recall-1.0
     // setting from q_similarity_ivf2)
     val qcells = assigned.filter(col("vec_id") < 10).select(col("vec_id"), col("v"))
       .crossJoin(broadcast(cent))
       .select(col("vec_id"), col("c_id"),
-              r4(cosineFast(s, col("v"), col("cv"))).as("csim"))
+              r4(cosineFast(col("v"), col("cv"))).as("csim"))
       .groupBy(col("vec_id"))
       .agg(call_function("top_k_pairs", col("csim"), col("c_id"), lit(2)).as("tk"))
       .select(col("vec_id").as("q_id"), explode(col("tk")).as("e"))
@@ -1269,7 +1258,7 @@ object LlmOps {
       .join(broadcast(cb), col("sp") === col("csp"))
       .select(col("vec_id").as("lq_id"), col("sp").as("lsp"),
               col("c_id").as("lcode"),
-              r4(cosineFast(s, col("sv"), col("cv"))).as("ls"))
+              r4(cosineFast(col("sv"), col("cv"))).as("ls"))
     // IVF pruning: candidates = vectors in a probed cell
     val cand = assigned.join(broadcast(qcells),
         col("c_id") === col("qc") && col("vec_id") =!= col("q_id"))
@@ -1292,8 +1281,8 @@ object LlmOps {
     val j = pool.join(assigned, pool("n_id") === assigned("vec_id"))
       .join(broadcast(qv), col("q_id") === col("q_id2"))
       .select(col("q_id"), col("n_id"),
-              r4(cosineFast(s, col("qv"), col("v"))).as("sim"))
-    ord(rerankTopK(s, j, 3), col("q_id"), col("rn"))
+              r4(cosineFast(col("qv"), col("v"))).as("sim"))
+    ord(rerankTopK(j, 3), col("q_id"), col("rn"))
   }
 
   /** q_embedding_centroid — per-label 64-dim centroid as
@@ -1562,7 +1551,6 @@ object LlmOps {
     * md5(word-3-gram) (a MinHash-style rolling fingerprint; md5 hex is
     * byte-identical across engines so string-min is oracle-stable). */
   def fingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextHashExprs.register(s)
     val docs = Tables.documents(s, d)
     ord(
       docs.select(col("doc_id"),
@@ -1697,7 +1685,6 @@ object LlmOps {
     * oracle's string grams agree exactly under the documented
     * collision-odds contract (q_dedup_ngram's rule). */
   def ngramNovelty(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextHashExprs.register(s)
     val docs = Tables.documents(s, d)
     val ex = docs
       .select(col("doc_id"),
@@ -1754,7 +1741,6 @@ object LlmOps {
     * single-pass NgramHashes scan + one min-shuffle on the gram key,
     * rolled up to 10 rows. */
   private def epochGramCurve(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextHashExprs.register(s)
     val docs = Tables.documents(s, d)
     // epoch deciles from the distributed rank tier — the doc-ID frame
     // is |docs|-proportional, so no single-partition ntile sort

@@ -119,8 +119,6 @@ object RetrievalOps {
     * ranking before the output r4 is exact; every tie breaks on the
     * smaller doc_id in both engines. */
   def rrfFusion(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
-    graft.functions.CosineSimilarity.register(s)
     // bounded per-group top-k list with rank = position: value desc,
     // ties to the smaller id — top_k_pairs' native order
     def topList(scored: DataFrame, v: Column, k: Int, rank: String) =
@@ -188,7 +186,6 @@ object RetrievalOps {
     * to ≤5 rows/query by the aggregate; the recall join touches
     * ≤10·|queries| rows. */
   def matryoshka(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val em = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("v16", slice(col("v"), 1, 16))
@@ -197,7 +194,7 @@ object RetrievalOps {
               col("v16").as("qv16"))
     val joined = em.join(broadcast(q), col("vec_id") =!= col("q_id"))
     def top5(sim: org.apache.spark.sql.Column) =
-      graft.operators.LlmOps.rerankTopK(s,
+      graft.operators.LlmOps.rerankTopK(
         joined.select(col("q_id"), col("vec_id").as("n_id"), r4(sim).as("sim")), 5)
     val full = top5(call_function("cosine_sim", col("qv"), col("v")))
       .select(col("q_id"), col("n_id"))
@@ -216,7 +213,6 @@ object RetrievalOps {
   }
 
   def ndcg(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val em = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
               col("embedding").cast("array<double>").as("v"))
@@ -230,7 +226,7 @@ object RetrievalOps {
     // the corpus-sized side is never shuffled for this join
     val top = em.select(col("vec_id").as("n_id"), col("label").as("n_label"))
       .join(broadcast(
-        graft.operators.LlmOps.rerankTopK(s, sims, 10)
+        graft.operators.LlmOps.rerankTopK(sims, 10)
           .join(broadcast(q.select(col("q_id"), col("q_label"))), "q_id")),
         "n_id")
     val dcg = top.groupBy(col("q_id"))
@@ -271,7 +267,6 @@ object RetrievalOps {
     * per query per map task), label lookup rides a broadcast of the
     * ≤10·|queries| winner frame; the corpus side is never shuffled. */
   def mrr(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val em = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
               col("embedding").cast("array<double>").as("v"))
@@ -283,7 +278,7 @@ object RetrievalOps {
               r4(call_function("cosine_sim", col("qv"), col("v"))).as("sim"))
     val top = em.select(col("vec_id").as("n_id"), col("label").as("n_label"))
       .join(broadcast(
-        graft.operators.LlmOps.rerankTopK(s, sims, 10)
+        graft.operators.LlmOps.rerankTopK(sims, 10)
           .join(broadcast(q.select(col("q_id"), col("q_label"))), "q_id")),
         "n_id")
     val rr = top.groupBy(col("q_id"))

@@ -92,7 +92,6 @@ object WindowOps {
     * at 100 TB. TopKAggregateSpec proves it row-identical to the window
     * form under adversarial repartitioning. */
   def topkPerGroup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
     val li = Tables.lineitem(s, d)
     val p = Tables.part(s, d)
     val rev = li.join(broadcast(p), li("l_partkey") === p("p_partkey"))

@@ -1,50 +1,64 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Add, Literal, Round}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import graft.functions._
 
-/** Custom optimizer rule (SURVEY.md §7.4 stretch demo): fold
-  * `round(round(x, p), p)` → `round(x, p)`.
+/** The engine's single function-injection point: every custom SQL
+  * function enters the session's function registry here, once, when
+  * the session state is built — callable from SQL text and via
+  * `functions.call_function`, with no per-query registration.
   *
-  * The engine's determinism contract (`Fin.r4` on every aggregated
-  * double, SURVEY.md §2.10) makes this pattern occur naturally when a
-  * rounded column is re-rounded by a downstream consumer — e.g.
-  * q_text_quality's `round(uniq_ratio * ..., 4)` over an already-rounded
-  * ratio. Rounding to the same scale twice is a no-op on the second
-  * application, so the inner expression's value is identical.
+  * [[graft.GraftSession.builder]] installs it; a deployment that builds
+  * its own session sets `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Deliberately tiny (SURVEY.md §4: every required rewrite is already a
-  * Catalyst built-in; the engine leans on Catalyst). It exists to
-  * exercise the Rule[LogicalPlan] + SparkSessionExtensions surface.
+  * `bloom_build` / `bloom_might_contain` expose Spark's own bloom-filter
+  * sketch pair (the expressions behind AQE's `InjectRuntimeFilter`) so
+  * a pipeline can apply the same fact-scan pruning EXPLICITLY, ahead of
+  * a join the planner can't see through. `bloom_build(key, est_items,
+  * num_bits)` is partial-aggregable: each map task builds a local
+  * filter and the merge ORs the bitsets — one pass over the dim keys
+  * with O(num_bits) state, never a collect of the keys.
+  * `bloom_might_contain(bloom, key)` requires a FOLDABLE bloom side
+  * (constant or scalar subquery — Spark's own contract): ship the
+  * SKETCH, not the data. No false negatives, so a downstream exact join
+  * sees every true match; false positives only cost wasted probe rows.
   */
-object FoldNestedRound extends Rule[LogicalPlan] {
-  /** Exactly +0.0 (not -0.0): the wrap we fold through must be the
-    * identity-or-normalize form Fin.r4 emits. */
-  private def isPosZero(v: Any): Boolean = v match {
-    case d: java.lang.Double => java.lang.Double.doubleToRawLongBits(d) == 0L
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case Round(inner @ Round(_, Literal(p1, _), _), Literal(p2, _), _)
-          if p1 == p2 =>
-        inner
-      // Fin.r4 now emits round(x,4) + 0.0 (negative-zero normalization),
-      // so nested r4 shows up as round(round(x,4)+0.0, 4): the outer
-      // round is a no-op on an already-rounded same-scale value — keep
-      // the inner Add (it preserves the +0.0 normalization).
-      case Round(add @ Add(Round(_, Literal(p1, _), _), Literal(z, _), _),
-                 Literal(p2, _), _) if p1 == p2 && isPosZero(z) =>
-        add
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }
 }
 
-/** Register with `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectOptimizerRule(_ => FoldNestedRound)
+object GraftExtensions {
+  /** (SQL name, implementing expression class, builder). */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity],
+      exprs => CosineSimilarity(exprs.head, exprs(1))),
+    ("minhash_sig", classOf[MinHashSig], exprs => MinHashSig(exprs.head)),
+    ("ngram_hashes", classOf[NgramHashes], exprs => NgramHashes(exprs.head)),
+    ("min_md5_ngram", classOf[MinMd5Ngram], exprs => MinMd5Ngram(exprs.head)),
+    ("intersect_size_sorted", classOf[IntersectSizeSorted],
+      exprs => IntersectSizeSorted(exprs.head, exprs(1))),
+    ("top_k_pairs", classOf[TopKPairs], { exprs =>
+      require(exprs.length == 3,
+        s"top_k_pairs(value, id, k) takes 3 arguments, got ${exprs.length}")
+      TopKPairs(exprs(0), exprs(1), exprs(2))
+    }),
+    ("bloom_build", classOf[BloomFilterAggregate], { exprs =>
+      require(exprs.length == 3,
+        s"bloom_build(key, est_items, num_bits) takes 3 arguments, got ${exprs.length}")
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+    }),
+    ("bloom_might_contain", classOf[BloomFilterMightContain], { exprs =>
+      require(exprs.length == 2,
+        s"bloom_might_contain(bloom, key) takes 2 arguments, got ${exprs.length}")
+      BloomFilterMightContain(exprs.head, exprs(1))
+    }),
+    ("dist_bucket", classOf[DistBucket], exprs => DistBucket(exprs)),
+    ("dist_fold", classOf[DistFold], exprs => DistFold(exprs)))
 }

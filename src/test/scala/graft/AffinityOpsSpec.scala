@@ -64,7 +64,6 @@ class AffinityOpsSpec extends AnyFunSuite {
   }
 
   test("intersect_size_sorted == size(array_intersect) on random sorted sets") {
-    graft.functions.TextHashExprs.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { i =>
       def set() = Array.fill(rnd.nextInt(40))(rnd.nextInt(50).toLong)

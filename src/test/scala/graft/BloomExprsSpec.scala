@@ -10,7 +10,6 @@ class BloomExprsSpec extends AnyFunSuite {
   import TestBase._
 
   test("bloom_build/bloom_might_contain: zero false negatives, bounded false positives") {
-    functions.BloomExprs.register(spark)
     import spark.implicits._
     val keys = spark.range(0, 2000).select((col("id") * 2).as("k")) // evens
     val sketch = keys

@@ -39,7 +39,6 @@ class ClusterEdgeSpec extends AnyFunSuite {
   }
 
   test("salted cell enumeration emits exactly the brute-force edge set") {
-    graft.functions.CosineSimilarity.register(spark)
     val salted = collectSet(
       graft.operators.LlmOps.clusterEdges(spark, em))
     val x = em.select(col("label"), col("vec_id").as("v1"), col("v").as("va"))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.CosineSimilarity
 
 /** The custom codegen Expression: interpreted and codegen paths agree,
   * nulls propagate, SQL registration works, and it matches the
@@ -20,7 +19,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
   test("known values: orthogonal = 0, identical = 1, opposite = -1") {
-    CosineSimilarity.register(spark)
     val d = df(Seq(
       Row(Seq(1.0, 0.0), Seq(0.0, 1.0)),
       Row(Seq(1.0, 2.0), Seq(1.0, 2.0)),
@@ -33,14 +31,12 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("null input propagates to null output") {
-    CosineSimilarity.register(spark)
     val d = df(Seq(Row(null, Seq(1.0, 2.0)), Row(Seq(1.0, 2.0), null)))
     val out = d.select(call_function("cosine_sim", col("a"), col("b")).as("c")).collect()
     assert(out.forall(_.isNullAt(0)))
   }
 
   test("callable from SQL after registration") {
-    CosineSimilarity.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 2.0d, 3.0d), array(1.0d, 2.0d, 3.0d)) AS c")
       .collect().head.getDouble(0)
@@ -48,7 +44,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("matches the higher-order-function formulation bit-for-bit on real data") {
-    CosineSimilarity.register(spark)
     val em = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50)

@@ -354,6 +354,32 @@ class DistPrefixSpec extends AnyFunSuite {
     assert(empty.getArray(0).numElements() == 0 && empty.getLong(1) == 0L)
   }
 
+  /** Group keys and maxes are compared through a Comparable cast; a
+    * type without one must fail analysis, naming the field, instead of
+    * throwing ClassCastException inside a task. */
+  test("dist_fold rejects a binary max field at analysis") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import graft.functions.DistFold
+    val elem = StructType(Seq(
+      StructField("k0", LongType), StructField("pid", IntegerType),
+      StructField("cnt", LongType), StructField("c1", LongType),
+      StructField("m_bin", BinaryType)))
+    val check = DistFold(Seq(
+      Literal.create(new GenericArrayData(Array.empty[Any]),
+        ArrayType(elem)), Literal(1), Literal(1))).checkInputDataTypes()
+    assert(check.isFailure, "binary max field passed the type check")
+    assert(check.toString.contains("m_bin"), check.toString)
+    val frame = spark.sql(
+      "SELECT array(named_struct('k0', 1L, 'pid', 0, 'cnt', 1L, " +
+        "'c1', 1L, 'm_bin', X'01')) AS a")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      frame.select(call_function("dist_fold", col("a"), lit(1), lit(1)))
+        .collect())
+    assert(err.getMessage.contains("m_bin"), err.getMessage)
+  }
+
   test("plans carry no unpartitioned window and no cartesian product") {
     val got = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
       cums = Seq("cs" -> col("x")), rowNum = Some("rn"),

@@ -75,7 +75,7 @@ class PlanSpec extends AnyFunSuite {
     val em = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val sub = L.pqSub(em)
-    val p = plan(L.pqEncode(spark, sub, L.pqCodebook(sub)))
+    val p = plan(L.pqEncode(sub, L.pqCodebook(sub)))
     assert(p.contains("BroadcastHashJoin"), "codebook join not broadcast:\n" + p)
     assert(p.contains("ObjectHashAggregate"), "argmax not on the bounded aggregate:\n" + p)
     assert(!p.contains("Window"), "PQ encoding planned a window sort:\n" + p)

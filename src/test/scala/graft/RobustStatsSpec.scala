@@ -436,7 +436,6 @@ class RobustStatsSpec extends AnyFunSuite {
     val grams = rows.map(_.getAs[Long]("n_grams")).sum
     assert(novel <= grams)
     // every distinct gram is owned exactly once, corpus-wide
-    graft.functions.TextHashExprs.register(spark)
     val distinctGrams = Tables.documents(spark, sf0001)
       .select(explode(expr("ngram_hashes(text)")).as("g"))
       .select(countDistinct(col("g"))).head().getLong(0)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TopKAggregate
 
 /** The native top_k_pairs aggregate must be row-identical to the window
   * row_number formulation — including ties — and invariant under how
@@ -12,7 +11,6 @@ class TopKAggregateSpec extends AnyFunSuite {
   import TestBase._
 
   private def viaAggregate(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopKAggregate.register(spark)
     df.groupBy(col("g"))
       .agg(call_function("top_k_pairs", col("v"), col("id"), lit(k)).as("tk"))
       .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
