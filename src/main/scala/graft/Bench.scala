@@ -33,23 +33,7 @@ object Bench {
     // never sets it.
     val storageReport = sys.env.get("SPARK_GRAFT_STORAGE_REPORT")
       .filter(_.nonEmpty)
-    val dropped = new java.util.concurrent.atomic.AtomicLong
-    val demoted = new java.util.concurrent.atomic.AtomicLong
-    storageReport.foreach { _ =>
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onBlockUpdated(
-              e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
-            val info = e.blockUpdatedInfo
-            if (info.blockId.isRDD) {
-              val lvl = info.storageLevel
-              if (!lvl.isValid) dropped.incrementAndGet()
-              else if (lvl.useDisk && !lvl.useMemory && info.memSize == 0)
-                demoted.incrementAndGet()
-            }
-          }
-        })
-    }
+    val probe = storageReport.map(_ => Probe.listen(spark))
     var peakMem, peakDisk, peakEntries = 0L
     def pollStorage(): (Long, Long, Long) = {
       // deprecated in favor of a listener, but it IS the one public API
@@ -97,11 +81,7 @@ object Bench {
     // second, compact summary line AFTER it — total + count + the 15
     // slowest queries — so the tail window always captures the headline
     // number and enough attribution to spot a regression.
-    // Locale.ROOT formatting (r12 ADVICE): Scala's f-interpolator is
-    // locale-sensitive — a comma-decimal default locale would emit
-    // invalid JSON and defeat the tail-window parse recovery.
-    def num(fmt: String, v: Double): String =
-      String.format(java.util.Locale.ROOT, fmt, Double.box(v))
+    import Probe.num
     val slowest = results.toSeq.sortBy(-_._2).take(15)
       .map { case (k, v) => s"\"" + k + "\":" + num("%.3f", v) }
       .mkString("{", ",", "}")
@@ -125,31 +105,20 @@ object Bench {
     // half-written file (r10 ADVICE).
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "")
     for (out <- Seq("/tmp/graft_bench.json", s"/tmp/graft_bench_$sfTag.json"))
-      try {
-        val tmp = java.nio.file.Paths.get(out + ".tmp")
-        java.nio.file.Files.write(tmp,
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, java.nio.file.Paths.get(out),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch { case e: java.io.IOException =>
+      try Probe.writeAtomic(out, line + "\n")
+      catch { case e: java.io.IOException =>
         System.err.println(s"[bench] could not write $out: $e") }
-    storageReport.foreach { path =>
+    for (path <- storageReport; listener <- probe) {
       // drain the listener bus so late BlockUpdated events are counted
-      // (LiveListenerBus.waitUntilEmpty is private[spark] at the source
-      // level but public bytecode — same reflection as DistPrefixSpec)
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Exception => () }
+      Probe.drainBus(spark)
+      val counts = listener.snapshot
       val (fm, fd, fe) = pollStorage()
       val rep =
         s"""{"peak_mem_bytes":$peakMem,"peak_disk_bytes":$peakDisk,""" +
         s""""peak_entries":$peakEntries,"final_mem_bytes":$fm,""" +
         s""""final_disk_bytes":$fd,"final_entries":$fe,""" +
-        s""""dropped_rdd_blocks":${dropped.get},""" +
-        s""""demoted_rdd_blocks":${demoted.get},""" +
+        s""""dropped_rdd_blocks":${counts.droppedRddBlocks},""" +
+        s""""demoted_rdd_blocks":${counts.demotedRddBlocks},""" +
         s""""driver_xmx":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "16g")}"}"""
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), rep + "\n")
       catch { case e: java.io.IOException =>

@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session configuration — one builder shared by every entry
-  * point: [[Bench]], [[Verify]], [[PlanDump]], `PlanAudit`, [[Profile]],
-  * [[ScaleCounts]], [[Demo]], the benchmark harness and the test
-  * suite's `TestBase` — so the plans the DuckDB oracle verifies and the
-  * plans `PlanSpec` guards are the SAME plans the benchmark times (r8
+  * point: [[Bench]], [[Verify]], [[PlanDump]], [[Profile]], the
+  * benchmark harness and the test suite's `TestBase` — so the plans the
+  * DuckDB oracle verifies and the plans `PlanSpec` guards are the SAME plans the benchmark times (r8
   * advice: a 10–32 MB join side must not take a broadcast shape in
   * bench and a shuffle shape in verify).
   *
@@ -76,4 +75,20 @@ object GraftSession {
       .config("spark.sql.queryExecutionListeners",
         classOf[SignalsListener].getName)
       .withExtensions(new graft.plans.GraftExtensions)
+
+  /** Run `body` with spark.sql.shuffle.partitions temporarily set to
+    * `n` — the partition-count lever for iterative loops and stream
+    * drains whose frames are orders of magnitude smaller than the
+    * ambient data — and restore the previous value in finally. Plans
+    * EXECUTED (and streams started) inside pick up `n`; frames
+    * materialized before the restore keep it. Session-global and not
+    * reentrant-safe: concurrent queries on the same SparkSession during
+    * the body run at `n` too — acceptable for the single-threaded
+    * bench/verify harness, by design. */
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, n.toString)
+    try body finally s.conf.set(key, prev)
+  }
 }

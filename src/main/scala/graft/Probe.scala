@@ -1,0 +1,122 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
+/** The dev tools' one instrumentation module: the Spark listener that
+  * [[Bench]] (storage report) and [[Profile]] (per-rep counters) read,
+  * the listener-bus drain that makes its counts final, the atomic
+  * record write, and the locale-independent number format of the JSON
+  * records. Nothing on the query path uses it. */
+object Probe {
+
+  /** One reading of a [[Listener]]. Times are summed over tasks
+    * (executor time, not wall); `jobMs` holds the wall of every job
+    * that ended since the last reset, in end order. */
+  final case class Counts(
+      jobs: Long, stages: Long, tasks: Long,
+      taskRunMs: Long, taskCpuNs: Long, gcMs: Long,
+      spillMemBytes: Long, spillDiskBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long,
+      droppedRddBlocks: Long, demotedRddBlocks: Long,
+      jobMs: Seq[Double])
+
+  /** Counts jobs, completed stages and tasks, sums the task metrics
+    * that separate executor work (run, CPU), memory pressure (GC,
+    * spill) and data motion (shuffle bytes), and counts cached-RDD
+    * blocks the BlockManager dropped (eviction or removal) or demoted
+    * memory→disk. Call [[Probe.drainBus]] before [[snapshot]] so late
+    * events are counted. */
+  final class Listener extends SparkListener {
+    private val jobs, stages, tasks, runMs, cpuNs, gcMs, spillMem,
+      spillDisk, shufRead, shufWrite, dropped, demoted = new AtomicLong
+    private val counters = Seq(jobs, stages, tasks, runMs, cpuNs, gcMs,
+      spillMem, spillDisk, shufRead, shufWrite, dropped, demoted)
+    private val starts = new ConcurrentHashMap[Int, Long]()
+    private val jobMs = scala.collection.mutable.ArrayBuffer.empty[Double]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      starts.put(e.jobId, System.nanoTime())
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(starts.remove(e.jobId)).foreach { t0 =>
+        jobMs.synchronized { jobMs += (System.nanoTime() - t0) / 1e6 }
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = e.taskMetrics
+      if (m != null) {
+        runMs.addAndGet(m.executorRunTime)
+        cpuNs.addAndGet(m.executorCpuTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        spillMem.addAndGet(m.memoryBytesSpilled)
+        spillDisk.addAndGet(m.diskBytesSpilled)
+        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+      val info = e.blockUpdatedInfo
+      if (info.blockId.isRDD) {
+        val lvl = info.storageLevel
+        if (!lvl.isValid) dropped.incrementAndGet()
+        else if (lvl.useDisk && !lvl.useMemory && info.memSize == 0)
+          demoted.incrementAndGet()
+      }
+    }
+
+    /** Zero every count (jobs still running keep their start time). */
+    def reset(): Unit = {
+      counters.foreach(_.set(0L))
+      jobMs.synchronized { jobMs.clear() }
+    }
+
+    def snapshot: Counts = Counts(
+      jobs.get, stages.get, tasks.get, runMs.get, cpuNs.get, gcMs.get,
+      spillMem.get, spillDisk.get, shufRead.get, shufWrite.get,
+      dropped.get, demoted.get, jobMs.synchronized { jobMs.toList })
+  }
+
+  /** A [[Listener]] added to `spark`'s context. */
+  def listen(spark: SparkSession): Listener = {
+    val l = new Listener
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
+
+  /** Block until every event posted so far has reached every listener.
+    * `LiveListenerBus.waitUntilEmpty` is private[spark] at the source
+    * level but public in bytecode, so it is reached by reflection. */
+  def drainBus(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  /** Write `text` (UTF-8) to `path` through `path.tmp` and an atomic
+    * rename, so a reader never sees a half-written record. */
+  def writeAtomic(path: String, text: String): Unit = {
+    val tmp = Paths.get(path + ".tmp")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, Paths.get(path),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `String.format` under `Locale.ROOT`. Scala's f-interpolator follows
+    * the default locale, and a comma-decimal locale would make the JSON
+    * records invalid. */
+  def num(fmt: String, v: Double): String =
+    String.format(java.util.Locale.ROOT, fmt, Double.box(v))
+}

@@ -37,9 +37,7 @@ import org.apache.spark.sql.functions._
   *     [[DistBucket]] binary-search index (grouped): the strictly-prior
   *     offsets that lift each local result to the global value, with
   *     zero join machinery and no window over the offsets frame, so
-  *     plans built here contain zero unpartitioned windows. (The
-  *     pre-r19 broadcast theta-join stitch survives behind
-  *     `wideGroups` for data-proportional group domains.)
+  *     plans built here contain zero unpartitioned windows.
   *
   * Equivalences (bit-exact, not approximate — the DuckDB oracle gate
   * re-verifies every consumer at three SFs):
@@ -117,16 +115,6 @@ object Dist {
     * escalation rule — now code, not prose (r15 verdict ask #5). */
   val MaxBuckets = 4096
 
-  /** r16 measurement knob (r15 verdict ask #4): set env
-    * SPARK_GRAFT_DIST_NOPERSIST=1 (or -Dgraft.dist.nopersist=1) to
-    * disable the tier's compute-once persists and measure the
-    * branch-recompute multiplier. Correctness is unaffected (the
-    * bucket pipeline is deterministic without the cache); never set
-    * on production paths. */
-  private def noPersist: Boolean =
-    sys.env.get("SPARK_GRAFT_DIST_NOPERSIST").contains("1") ||
-      sys.props.get("graft.dist.nopersist").contains("1")
-
   /** Lexicographic SORT-ORDER comparison of two cut structs (fields
     * k0..k{m-1}) as an int Column in {-1,0,1}: per-key direction and
     * resolved null placement; null-safe equality chains to the next
@@ -177,22 +165,6 @@ object Dist {
     *               [2, [[MaxBuckets]]], so tiny frames pay one cut of
     *               fixed overhead and data-scale frames keep full
     *               parallelism
-    * @param wideGroups grouped-path offsets strategy (r19). The default
-    *               (false) rides the offsets on ONE scalar subquery —
-    *               a (part…, pid)-sorted array prefix-folded by
-    *               [[DistFold]] in O(|offsets|), looked up per row by
-    *               [[DistBucket]] binary search — which is correct at
-    *               any size but COLLECTS the whole |groups|-bounded
-    *               offsets frame onto one task. Every current caller's
-    *               group domain is constant-bounded (segments, langs,
-    *               variants, calendar days), where that array is tiny.
-    *               A caller whose group domain is DATA-PROPORTIONAL
-    *               (per-customer, per-document) must pass true to keep
-    *               the broadcast theta-join stitch instead, which
-    *               degrades via broadcast pressure rather than a
-    *               single-task array build. The caller owns this
-    *               choice because group-domain cardinality is a
-    *               semantic fact the plan cannot know.
     */
   def prefix(df: DataFrame,
              part: Seq[String],
@@ -203,8 +175,7 @@ object Dist {
              groupN: Option[String] = None,
              lead1: Option[(String, String)] = None,
              maxPrev: Seq[(String, Column)] = Nil,
-             parts: Int = 0,
-             wideGroups: Boolean = false): DataFrame = {
+             parts: Int = 0): DataFrame = {
     val pid = "__dp_pid"
     val lrn = "__dp_lrn"
     val partCols = pid +: part
@@ -218,8 +189,8 @@ object Dist {
     // array, array_sorts it with the key comparator, picks the
     // evenly-spaced cut tuples, and dedups adjacent equals;
     // [[DistBucket]] binary-searches the subquery value per row.
-    // Plan construction therefore runs ZERO Spark jobs (explain /
-    // PlanAudit / plan specs execute nothing), and the persist stays
+    // Plan construction therefore runs ZERO Spark jobs (explain and
+    // the plan specs execute nothing), and the persist stays
     // a compute-once optimization — eviction or executor loss
     // recomputes bit-identically (DistPrefixSpec evicts every cache
     // between runs and pins equality).
@@ -227,7 +198,7 @@ object Dist {
       part.map(p => Key(col(p), asc = true, nullsFirst = true)) ++
         orderKeys(df, order)
     val keyCols = keys.map(_.c)
-    val cached = if (noPersist) df else graft.Iter.share(df)
+    val cached = graft.Iter.share(df)
     val idiv = (a: Column, b: Column) => call_function("div", a, b)
     // ONE SCALAR SUBQUERY per tier call, not broadcast cross-joins
     // into the fact frame: the cuts frame is referenced by every tier
@@ -331,13 +302,11 @@ object Dist {
       count(lit(1)).as("__dp_cnt") +:
         (cums.map { case (name, e) => sum(e).as(s"__dp_t_$name") } ++
          maxPrev.map { case (name, e) => max(e).as(s"__dp_m_$name") })
-    // persisted: the tiny totals frame is read 2-4× (both sides of the
-    // prior join, the group totals, the lead stitch) — caching it makes
-    // the input-cache re-aggregation run once; recompute-safe like the
-    // input persist
-    val offs0 = ordered.groupBy(partCols.map(col): _*)
-      .agg(totAggs.head, totAggs.tail: _*)
-    val offs = if (noPersist) offs0 else graft.Iter.share(offs0)
+    // persisted: the tiny totals frame is read by the offsets subquery
+    // and again by the lead stitch — caching it makes the input-cache
+    // re-aggregation run once; recompute-safe like the input persist
+    val offs = graft.Iter.share(ordered.groupBy(partCols.map(col): _*)
+      .agg(totAggs.head, totAggs.tail: _*))
 
     val sameGroup = (l: String, r: String) =>
       part.foldLeft(lit(true))((c, k) => c && col(s"$l.$k") <=> col(s"$r.$k"))
@@ -392,7 +361,7 @@ object Dist {
         out = out.withColumn(gn, col("__dp_sub.gn"))
       }
       out = out.drop("__dp_sub", "__dp_me")
-    } else if (!wideGroups) {
+    } else {
       // GROUPED, bounded group domain (r19, the r18 verdict ask #1):
       // the same single-subquery design as the global path, extended
       // with group keys. The (part…, pid)-sorted offsets array is
@@ -406,8 +375,9 @@ object Dist {
       // theta self-join + conditional-aggregate rollup + broadcast
       // stitch join (two broadcast builds per action) from the grouped
       // plan. The collected array is |groups| + buckets entries —
-      // constant-bounded for every current caller (see @param
-      // wideGroups for the contract and the escape hatch).
+      // constant-bounded for every current caller (segments, langs,
+      // variants, calendar days), so the array is tiny; a caller with
+      // a data-proportional group domain would build it on one task.
       val payloadG = struct(
         (part.zipWithIndex.map { case (p, i) => col(p).as(s"k$i") } ++
           (Seq(pid, "__dp_cnt").map(col)) ++
@@ -438,47 +408,6 @@ object Dist {
         out = out.withColumn(gn, col("__dp_me.gn"))
       }
       out = out.drop("__dp_sub", "__dp_idx", "__dp_me")
-    } else {
-      // GROUPED: strictly-prior offsets via the window-free broadcast
-      // theta self-join over the constant-bounded offsets frame. The
-      // join matches the whole GROUP (not only strictly-prior buckets)
-      // and the prior filter lives in conditional aggregates, so the
-      // same pass also yields the group total `groupN` needs — one
-      // rollup + one broadcast join where r16-r18.0 ran two of each
-      // per action (the sums are the same exact int64 either way,
-      // every l row matches at least itself)
-      val isPrior = col(s"r.$pid") < col(s"l.$pid")
-      val prior = offs.as("l")
-        .join(broadcast(offs.as("r")), sameGroup("l", "r"), "left")
-        .groupBy(partCols.map(k => col(s"l.$k")): _*)
-        .agg(coalesce(sum(when(isPrior, col("r.__dp_cnt"))), lit(0L))
-               .as("__dp_off_cnt"),
-          (cums.map { case (name, _) =>
-            coalesce(sum(when(isPrior, col(s"r.__dp_t_$name"))), lit(0L))
-              .as(s"__dp_off_$name")
-          } ++ maxPrev.map { case (name, _) =>
-            max(when(isPrior, col(s"r.__dp_m_$name"))).as(s"__dp_offm_$name")
-          } ++ groupN.map { gn =>
-            sum(col("r.__dp_cnt")).as(gn)
-          }): _*)
-        .select(partCols.map(k => col(s"l.$k").as(k)) ++
-                ("__dp_off_cnt" +: (cums.map(c => s"__dp_off_${c._1}") ++
-                                    maxPrev.map(c => s"__dp_offm_${c._1}") ++
-                                    groupN.toSeq))
-                  .map(col): _*)
-      // NULL-SAFE stitch (r19): `join(.., partCols)` equi-join semantics
-      // drop rows whose group key is NULL — latent in r16-r18 (no tier
-      // caller groups by a nullable key) but a divergence from both the
-      // window semantics and the subquery path, so the escape hatch
-      // joins on <=> like the prior self-join above it
-      val priorR = prior.select(
-        partCols.map(k => col(k).as(s"__dp_r_$k")) ++
-          ("__dp_off_cnt" +: (cums.map(c => s"__dp_off_${c._1}") ++
-                              maxPrev.map(c => s"__dp_offm_${c._1}") ++
-                              groupN.toSeq)).map(col): _*)
-      out = local.join(broadcast(priorR),
-          partCols.map(k => col(k) <=> col(s"__dp_r_$k")).reduce(_ && _))
-        .drop(partCols.map(k => s"__dp_r_$k"): _*)
     }
 
     // lead(x, 1) boundary stitch: the next bucket's first src value

@@ -132,21 +132,13 @@ object AffinityOps {
     * agree absent 64-bit collisions). NOTE this corpus is ~8% genuine
     * near-dup pairs at τ=0.9 (965k true pairs at sf0.1), so the OUTPUT
     * is inherently large; the filters bound the wasted verifications
-    * (3.3M candidates for 965k hits), not the true result.
+    * (3.3M candidates for 965k hits), not the true result. Both
+    * counts grow exactly linearly, 3.4 candidates per hit at sf0.1,
+    * 10× and 100× (counted in r17; BASELINE.md keeps the table).
     * The threshold applies to the exact-integer intersection ratio,
     * divided once — hash-safe and identical in the oracle's all-pairs
     * form. */
-  def simJoinPrefix(s: SparkSession, d: String): DataFrame =
-    simJoinParts(s, d)._2
-
-  /** (candidate pairs, verified result) — the candidate frame is the
-    * post-prefix/length/positional-filter join output BEFORE exact
-    * verification. Exposed (package-private) so the scale probe can
-    * COUNT candidates vs results at 10×/100× directly (r16 verdict ask
-    * #5: the linear-in-output floor as a counted fact, not an
-    * inference); production callers use [[simJoinPrefix]]. */
-  private[graft] def simJoinParts(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  def simJoinPrefix(s: SparkSession, d: String): DataFrame = {
     // the distinct token frame feeds FOUR subtrees (sizes, dfs, prefix
     // rows, verification arrays) — persist() computes the
     // explode+distinct once instead of four times (the ivf2 pattern);
@@ -223,8 +215,7 @@ object AffinityOps {
                           col("m").as("m1"))
     val b = docArr.select(col("doc_id").as("d2"), col("toks").as("t2"),
                           col("m").as("m2"))
-    (cand,
-     ord(
+    ord(
       pin(cand.join(a, "d1"), col("d2")).join(b, "d2")
         .withColumn("inter",
           call_function("intersect_size_sorted", col("t1"), col("t2")))
@@ -233,6 +224,6 @@ object AffinityOps {
         .filter(col("j") >= Tau)
         .select(col("d1"), col("d2"), col("inter"), col("m1"), col("m2"),
                 r4(col("j")).as("jaccard")),
-      col("d1"), col("d2")))
+      col("d1"), col("d2"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fin, Tables}
+import graft.{Fin, GraftSession, Tables}
 import graft.Iter.IterOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -385,22 +385,6 @@ object CurationOps {
     * not. [[cc]] sizes this from the measured edge count instead. */
   val CcIterParts = 4
 
-  /** Run `body` with spark.sql.shuffle.partitions temporarily set to
-    * `n` — the partition-count lever for iterative loops whose frames
-    * are orders of magnitude smaller than the ambient data. Restores
-    * the previous value in finally; plans EXECUTED inside pick up `n`,
-    * frames already materialized (checkpointed) before the restore are
-    * unaffected. Session-global and not reentrant-safe: concurrent
-    * queries on the same SparkSession during the body run at `n` too —
-    * acceptable for the single-threaded bench/verify harness, by
-    * design. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   /** Connected components by min-label propagation over an edge list
     * `(d1, d2)` (direction irrelevant — symmetrized internally).
     * Returns `(doc_id, component = min reachable id)` for every vertex
@@ -432,7 +416,7 @@ object CurationOps {
     * scalar read NPEs. */
   def ccMinLabel(edges0: DataFrame, maxIter: Int = 64,
                  iterParts: Int = CcIterParts): DataFrame =
-      withShufflePartitions(edges0.sparkSession, iterParts) {
+      GraftSession.withShufflePartitions(edges0.sparkSession, iterParts) {
     val edges = edges0.select(col("d1"), col("d2"))
       .union(edges0.select(col("d2").as("d1"), col("d1").as("d2")))
       .repartition(iterParts, col("d1"))
@@ -542,7 +526,7 @@ object CurationOps {
     * is cheaper per round. */
   def ccStars(edges0: DataFrame, maxIter: Int = 32,
               iterParts: Int = CcIterParts): DataFrame =
-      withShufflePartitions(edges0.sparkSession, iterParts) {
+      GraftSession.withShufflePartitions(edges0.sparkSession, iterParts) {
     // canonical undirected, self-loop-free edge set (a < b); the
     // distinct() shuffle lands it at iterParts partitions — every
     // subsequent round's groupBy/join/distinct inherits the same count

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Fin
+import graft.{Fin, GraftSession}
 
 /** Structured Streaming surface (SURVEY.md §2.9): the Spark-native form
   * of the reference's incremental high-water-mark sync — watermarks
@@ -141,10 +141,7 @@ object StreamingOps {
     val pub = graft.sources.CachedDir.materialize(s, d, "events.parquet", tag) {
       tmp =>
         val base = java.nio.file.Files.createTempDirectory(tag).toString
-        val key = "spark.sql.shuffle.partitions"
-        val prev = s.conf.get(key)
-        s.conf.set(key, StreamGateParts.toString)
-        val schema = try {
+        val schema = GraftSession.withShufflePartitions(s, StreamGateParts) {
           val df = out
           val q = df
             .writeStream.trigger(Trigger.AvailableNow())
@@ -154,7 +151,7 @@ object StreamingOps {
             .start()
           q.awaitTermination()
           df.schema
-        } finally s.conf.set(key, prev)
+        }
         // batch rewrite: drops the sink's _spark_metadata dir and leaves
         // the _SUCCESS marker CachedDir's publish contract requires.
         // The stream's schema is passed EXPLICITLY so a drain that
@@ -765,10 +762,7 @@ object StreamingOps {
   def drainUpsert(s: SparkSession, src: String, work: String,
                   filesPerTrigger: Int): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamGateParts.toString)
-    try {
+    GraftSession.withShufflePartitions(s, StreamGateParts) {
       // resume from the newest committed sink version: a re-run against
       // the same work dir (checkpoint intact, no new source files) runs
       // zero batches and returns the existing state unchanged — the
@@ -799,7 +793,7 @@ object StreamingOps {
       q.awaitTermination()
       cur.map(p => s.read.parquet(p)).getOrElse(
         latestState(s.read.schema(eventsMicros).parquet(src).limit(0)))
-    } finally s.conf.set(key, prev)
+    }
   }
 
   /** The published streaming-upsert sink: [[drainUpsert]] over the

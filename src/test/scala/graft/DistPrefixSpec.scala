@@ -167,17 +167,12 @@ class DistPrefixSpec extends AnyFunSuite {
 
   /** r16 (r15 verdict ask #3): plan construction must run ZERO Spark
     * jobs — r15 ran a count + a sample collect eagerly, so explain /
-    * PlanAudit / plan specs executed real jobs and audit artifacts
+    * plan audits / plan specs executed real jobs and audit artifacts
     * shifted for visibility reasons. The cuts are now in-plan; even
     * forcing analysis + optimization must submit nothing. */
   test("plan construction and optimization run zero Spark jobs") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    Probe.drainBus(spark) // earlier tests' job events stay out of the count
+    val l = Probe.listen(spark)
     try {
       val df = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
         cums = Seq("cs" -> col("x")), rowNum = Some("rn"),
@@ -189,13 +184,9 @@ class DistPrefixSpec extends AnyFunSuite {
       // Drain the listener bus DETERMINISTICALLY before asserting
       // (r16 ADVICE): a fixed sleep can false-pass on a slow bus —
       // an onJobStart still in flight would arrive after the assert.
-      // LiveListenerBus.waitUntilEmpty is private[spark] (public at
-      // the bytecode level), so reach it via reflection.
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      assert(jobs.get() == 0,
-        s"plan construction submitted ${jobs.get()} Spark job(s)")
+      Probe.drainBus(spark)
+      val jobs = l.snapshot.jobs
+      assert(jobs == 0, s"plan construction submitted $jobs Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -258,14 +249,12 @@ class DistPrefixSpec extends AnyFunSuite {
     assert(bucketOf(Seq(1.0, 2.0, 3.0), 2.5) == ((2, 2)))
   }
 
-  /** r19: the grouped path's offsets now ride one scalar subquery
-    * ([[graft.functions.DistFold]] prefix fold + dist_bucket lookup)
-    * by default; `wideGroups = true` keeps the broadcast theta-join
-    * stitch for data-proportional group domains. Both forms must be
-    * bit-equal — to each other and to the reference window — including
-    * on NULL group keys (the fold's group-change comparator and the
-    * lookup's nulls-first spec both place nulls like the sort). */
-  test("grouped subquery path == join path == reference, incl. null groups") {
+  /** r19: the grouped path's offsets ride one scalar subquery
+    * ([[graft.functions.DistFold]] prefix fold + dist_bucket lookup).
+    * It must be bit-equal to the reference window, including on NULL
+    * group keys (the fold's group-change comparator and the lookup's
+    * nulls-first spec both place nulls like the sort). */
+  test("grouped subquery path == reference, incl. null groups") {
     val withNulls = base.withColumn("g",
       when(col("k") % 5 === 0, lit(null: String)).otherwise(col("g")))
     val w = Window.partitionBy(col("g")).orderBy(col("v"), col("k"))
@@ -276,34 +265,26 @@ class DistPrefixSpec extends AnyFunSuite {
       .withColumn("pm", max(col("x")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
-    def mk(wide: Boolean) = Dist.prefix(withNulls, Seq("g"),
+    val got = Dist.prefix(withNulls, Seq("g"),
       Seq(col("v"), col("k")), cums = Seq("cs" -> col("x")),
       rowNum = Some("rn"), groupN = Some("n"),
-      maxPrev = Seq("pm" -> col("x")), parts = 7, wideGroups = wide)
+      maxPrev = Seq("pm" -> col("x")), parts = 7)
     val cols = Seq("k", "cs", "rn", "pm", "n")
-    val sub = sortedRows(mk(false), cols: _*)
-    val join = sortedRows(mk(true), cols: _*)
-    val refRows = sortedRows(ref, cols: _*)
-    assert(sub == refRows, "subquery grouped path diverged from window")
-    assert(join == refRows, "join grouped path diverged from window")
+    assert(sortedRows(got, cols: _*) == sortedRows(ref, cols: _*),
+      "subquery grouped path diverged from window")
   }
 
-  /** r19: the grouped default path must carry NO join for the offsets
+  /** r19: the grouped path must carry NO join for the offsets
     * stitch — the whole point of the subquery redesign is zero join
-    * machinery (and two fewer broadcast builds) per action. The only
-    * joins the wide (escape-hatch) form keeps are the offsets stitch
-    * ones. */
-  test("grouped subquery path plans no offsets join; wideGroups keeps it") {
-    def joins(wide: Boolean) = Dist.prefix(base, Seq("g"),
+    * machinery (and two fewer broadcast builds) per action. */
+  test("grouped subquery path plans no offsets join") {
+    val joins = Dist.prefix(base, Seq("g"),
         Seq(col("v"), col("k")), cums = Seq("cs" -> col("x")),
-        groupN = Some("n"), parts = 7, wideGroups = wide)
+        groupN = Some("n"), parts = 7)
       .queryExecution.optimizedPlan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.size
-    assert(joins(wide = false) == 0,
-      "grouped subquery path still plans a join")
-    assert(joins(wide = true) >= 1,
-      "wideGroups escape hatch lost its join stitch")
+    assert(joins == 0, "grouped subquery path still plans a join")
   }
 
   /** r19: [[graft.functions.DistFold]] pinned directly against a brute

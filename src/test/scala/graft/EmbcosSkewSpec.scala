@@ -169,13 +169,8 @@ class EmbcosSkewSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(l)
     try {
-      def drain(): Unit = { // ExecutionListenerBus rides the shared bus
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      }
       LlmOps.dedupEmbcosOn(spark, biasedCorpus(1300)).collect()
-      drain()
+      Probe.drainBus(spark) // ExecutionListenerBus rides the shared bus
       val active = captured.values.asScala.toSeq
       assert(active.nonEmpty, "no occupancy-cap metric observed")
       assert(active.exists(r => r.getLong(0) > 0L),
@@ -184,7 +179,7 @@ class EmbcosSkewSpec extends AnyFunSuite {
         s"expected 17 sub-lanes (ceil(1300/81)) in $active")
       captured.clear()
       LlmOps.dedupEmbcosOn(spark, skewedCorpus(40)).collect()
-      drain()
+      Probe.drainBus(spark)
       // On a benign corpus the heavy frame is EMPTY, and AQE's
       // empty-relation propagation may prune the whole broadcast
       // branch — CollectMetrics included — so the metric either

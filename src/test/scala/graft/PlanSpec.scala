@@ -48,7 +48,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("flagships run with ≥1 whole-stage-codegen stage in the EXECUTED plan") {
     // r12 verdict ask #2: the pre-execution AQE plan string never
-    // contains `*(N)` markers, so PlanAudit's wsc column was dead.
+    // contains `*(N)` markers, so the plan audit's wsc column was dead.
     // Executed-plan markers are the real fusion evidence — a codegen-
     // broken plan (e.g. a non-codegen expression in the hot path)
     // drops to wsc=0 here and fails CI.
@@ -56,7 +56,7 @@ class PlanSpec extends AnyFunSuite {
         "q_agg_pricing" -> graft.operators.RelationalOps.aggPricing(spark, sf0001),
         "q_sessionize" -> graft.operators.WindowOps.sessionize(spark, sf0001))) {
       df.collect()
-      val wsc = PlanMetrics.wscStages(df.queryExecution.executedPlan.toString)
+      val wsc = PlanDump.wscStages(df.queryExecution.executedPlan.toString)
       assert(wsc >= 1, s"$name executed with no WholeStageCodegen stage:\n" +
         df.queryExecution.executedPlan.toString)
     }
