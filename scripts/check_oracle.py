@@ -8,10 +8,28 @@ as DuckDB views, runs each oracle SQL, and compares against the Spark
 parquet dump <verifyOutDir>/<name>/ with columns sorted by name —
 the same shape the driver hashes. Exact match required (doubles are
 round(,4) on both sides by construction).
+
+DuckDB runs under a memory limit and spills to a fresh temporary
+directory (removed at exit). A watcher thread interrupts the running
+oracle query once that directory takes more than TEMP_CAP_MB on disk,
+so a query whose plan blows up fails by name instead of filling the
+disk. DuckDB can keep writing for some seconds before it stops: a full
+sf0.1 run peaked at 16.5 GB of temp files. DuckDB's own `max_temp_directory_size` does not do this in 1.0:
+it counts the data DuckDB keeps in the directory, not the size of its
+files, and q_modularity's oracle at sf0.1 grew the directory to 18.7 GB
+under a 12 GB setting. The limits fit the heaviest passing oracles at
+sf0.1: q_graph_2hop and q_graph_reciprocity take 9–10 GB of temp files
+under the 8 GB memory limit, and q_attribution_markov needs more than
+3 GB of memory already at sf0.01. Each oracle query's wall time is
+printed on its PASS line or on its oracle-error FAIL line, and their
+sum before the summary line.
 """
-import json, struct, sys, math
+import json, os, shutil, struct, sys, math, tempfile, threading, time
 import duckdb
 import numpy as np
+
+MEMORY_LIMIT = "8GB"
+TEMP_CAP_MB = 12000
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -38,18 +56,59 @@ def norm(v):
         return tuple(norm(x) for x in v)
     return v
 
+def temp_bytes(path):
+    """Bytes the files directly under `path` take on disk."""
+    total = 0
+    for e in os.scandir(path):
+        try:
+            total += e.stat().st_blocks * 512
+        except FileNotFoundError:  # DuckDB removed it meanwhile
+            pass
+    return total
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    tmp = tempfile.mkdtemp(prefix="check_oracle_duckdb_")
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": tmp})
+    over_cap, stop = threading.Event(), threading.Event()
+
+    def watch():
+        while not stop.wait(0.2):
+            if temp_bytes(tmp) > TEMP_CAP_MB * 10**6:
+                over_cap.set()
+                con.interrupt()
+
+    watcher = threading.Thread(target=watch, daemon=True)
+    watcher.start()
+    try:
+        return compare_all(con, sf_dir, out_dir, over_cap)
+    finally:
+        stop.set()
+        watcher.join()
+        con.close()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+def compare_all(con, sf_dir, out_dir, over_cap):
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     sqls = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    oracle_s = 0.0
     for name, sql in sorted(sqls.items()):
+        over_cap.clear()
+        t0 = time.monotonic()
+        oracle, err = None, None
         try:
             oracle = con.execute(sql).fetchdf()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            err = e
+        dt = time.monotonic() - t0
+        oracle_s += dt
+        if err is not None:
+            if over_cap.is_set():
+                err = f"temp files passed {TEMP_CAP_MB} MB ({err})"
+            print(f"FAIL {name}: oracle SQL error after {dt:.2f} s: {err}")
             n_fail += 1
             continue
         try:
@@ -87,9 +146,10 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: first diff at row {bad[0]}:\n  oracle={bad[1]}\n  spark ={bad[2]}")
             n_fail += 1
             continue
-        print(f"PASS {name} ({len(o)} rows)")
+        print(f"PASS {name} ({len(o)} rows, oracle {dt:.2f} s)")
         n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {len(sqls)} total")
+    print(f"\noracle wall {oracle_s:.1f} s")
+    print(f"{n_pass} pass, {n_fail} fail, {len(sqls)} total")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Fixture test for check_oracle.py (driver-side python only).
 
-Covers the two contracts the local mirror must keep aligned with the
+Covers the contracts the local mirror must keep aligned with the
 driver's checker:
   1. NEGATIVE: a Spark dump with a top-level array column is REJECTED
      (the driver's pandas-based hasher cannot handle it) — and the
      rejection must trigger on type, not on hasattr('tolist'), so plain
      numeric columns are never false-flagged.
   2. POSITIVE: a scalar dump that matches its oracle passes.
+  3. BOUNDED: an oracle query whose temp files pass the cap fails by
+     name.
 
 Usage: python3 scripts/test_check_oracle.py   (exit 0 = all good)
 """
@@ -56,4 +58,16 @@ run_case("SELECT 1 AS id, 2.5 AS x",
          "SELECT 1 AS id, 9.9 AS x",
          expect_fail=True)
 
-print("check_oracle fixture: 3/3 cases behaved as expected")
+# 4. an oracle query whose temp files pass the cap is interrupted and
+#    fails by name; the dump matches its result, so under the default
+#    limits the same case passes
+BIG = "SELECT count(DISTINCT i) AS n FROM range(30000000) t(i)"
+run_case("SELECT CAST(30000000 AS BIGINT) AS n", BIG, expect_fail=False)
+limits = (check_oracle.MEMORY_LIMIT, check_oracle.TEMP_CAP_MB)
+check_oracle.MEMORY_LIMIT, check_oracle.TEMP_CAP_MB = "64MB", 1
+try:
+    run_case("SELECT CAST(30000000 AS BIGINT) AS n", BIG, expect_fail=True)
+finally:
+    check_oracle.MEMORY_LIMIT, check_oracle.TEMP_CAP_MB = limits
+
+print("check_oracle fixture: 5/5 cases behaved as expected")

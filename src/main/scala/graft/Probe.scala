@@ -5,8 +5,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The dev tools' one instrumentation module: the Spark listener that
   * [[Bench]] (storage report) and [[Profile]] (per-rep counters) read,
@@ -17,28 +19,43 @@ object Probe {
 
   /** One reading of a [[Listener]]. Times are summed over tasks
     * (executor time, not wall); `jobMs` holds the wall of every job
-    * that ended since the last reset, in end order. */
+    * that ended since the last reset, in end order. `codegenCompiles`
+    * and `codegenCompileNs` count the Janino compilations of generated
+    * code (cache misses of Spark's codegen class cache) and their
+    * time, JVM-wide: driver planning and, in local mode, the executors'
+    * tasks. */
   final case class Counts(
       jobs: Long, stages: Long, tasks: Long,
       taskRunMs: Long, taskCpuNs: Long, gcMs: Long,
       spillMemBytes: Long, spillDiskBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long,
       droppedRddBlocks: Long, demotedRddBlocks: Long,
+      codegenCompiles: Long, codegenCompileNs: Long,
       jobMs: Seq[Double])
+
+  /** (compilations, compile ns) since JVM start. Spark keeps both as
+    * JVM-wide statics, not listener events. The first call initializes
+    * `CodeGenerator`, which sizes its class cache then, so it must come
+    * after the session is built (see [[GraftSession]]); hence a
+    * [[Listener]] is only made by [[listen]], which takes the session. */
+  private def codegenTotals: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Counts jobs, completed stages and tasks, sums the task metrics
     * that separate executor work (run, CPU), memory pressure (GC,
     * spill) and data motion (shuffle bytes), and counts cached-RDD
     * blocks the BlockManager dropped (eviction or removal) or demoted
     * memory→disk. Call [[Probe.drainBus]] before [[snapshot]] so late
-    * events are counted. */
-  final class Listener extends SparkListener {
+    * events are counted. The codegen counts are deltas of Spark's
+    * JVM-wide totals since construction or the last [[reset]]. */
+  final class Listener private[Probe] () extends SparkListener {
     private val jobs, stages, tasks, runMs, cpuNs, gcMs, spillMem,
       spillDisk, shufRead, shufWrite, dropped, demoted = new AtomicLong
     private val counters = Seq(jobs, stages, tasks, runMs, cpuNs, gcMs,
       spillMem, spillDisk, shufRead, shufWrite, dropped, demoted)
     private val starts = new ConcurrentHashMap[Int, Long]()
     private val jobMs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    @volatile private var codegenBase = codegenTotals
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
@@ -81,12 +98,18 @@ object Probe {
     def reset(): Unit = {
       counters.foreach(_.set(0L))
       jobMs.synchronized { jobMs.clear() }
+      codegenBase = codegenTotals
     }
 
-    def snapshot: Counts = Counts(
-      jobs.get, stages.get, tasks.get, runMs.get, cpuNs.get, gcMs.get,
-      spillMem.get, spillDisk.get, shufRead.get, shufWrite.get,
-      dropped.get, demoted.get, jobMs.synchronized { jobMs.toList })
+    def snapshot: Counts = {
+      val (compiles, compileNs) = codegenTotals
+      Counts(
+        jobs.get, stages.get, tasks.get, runMs.get, cpuNs.get, gcMs.get,
+        spillMem.get, spillDisk.get, shufRead.get, shufWrite.get,
+        dropped.get, demoted.get,
+        compiles - codegenBase._1, compileNs - codegenBase._2,
+        jobMs.synchronized { jobMs.toList })
+    }
   }
 
   /** A [[Listener]] added to `spark`'s context. */

@@ -9,7 +9,9 @@ package graft
   * and CPU time, GC, spill and shuffle bytes — the split that tells a
   * query paying scheduling rounds (many short jobs) from one paying
   * data work, and attributes a wall-time drift to a stage class
-  * instead of arguing about it. Plans are [[PlanDump]]'s job.
+  * instead of arguing about it — and the codegen compilations and
+  * their time (a warm rep of a query whose generated code is the same
+  * every run compiles nothing). Plans are [[PlanDump]]'s job.
   *
   * Results are also written to /tmp/graft_profile.json (atomic
   * tmp+rename, the Bench pattern): `sbt --error` suppresses the
@@ -51,7 +53,9 @@ object Profile {
             f"spillMem=${c.spillMemBytes / 1048576}%d MB " +
             f"spillDisk=${c.spillDiskBytes / 1048576}%d MB " +
             f"shufRead=${c.shuffleReadBytes / 1048576}%d MB " +
-            f"shufWrite=${c.shuffleWriteBytes / 1048576}%d MB")
+            f"shufWrite=${c.shuffleWriteBytes / 1048576}%d MB " +
+            f"compiles=${c.codegenCompiles}%d " +
+            f"compile=${c.codegenCompileNs / 1e9}%.2f s")
           (dt, c, rows)
         }
         val times = runs.map(_._1)
@@ -63,6 +67,8 @@ object Profile {
           s""""spill_disk_bytes":${c.spillDiskBytes},""" +
           s""""shuffle_read_bytes":${c.shuffleReadBytes},""" +
           s""""shuffle_write_bytes":${c.shuffleWriteBytes},""" +
+          s""""codegen_compiles":${c.codegenCompiles},""" +
+          s""""codegen_compile_ns":${c.codegenCompileNs},""" +
           s""""job_ms":[${c.jobMs.map(num("%.1f", _)).mkString(",")}]}"""
         }
         records += s"""{"query":"$name","reps":[${times.map(num("%.3f", _)).mkString(",")}],""" +

@@ -60,11 +60,13 @@ import org.apache.spark.sql.functions._
   * over a sorted cut array built IN the plan from a hash-gated sample
   * (order- and layout-insensitive, a pure function of the data
   * multiset), so ANY re-evaluation of any subtree — executor loss,
-  * cache eviction, AQE re-plan — assigns identical ids. The input and
-  * the totals frame ARE `persist()`ed as compute-once optimizations,
-  * but eviction or loss of those blocks is safe by construction
-  * (DistPrefixSpec evicts every cache between runs and pins
-  * bit-equality).
+  * cache eviction, AQE re-plan — assigns identical ids. The input IS
+  * `persist()`ed as a compute-once optimization, but eviction or loss
+  * of its blocks is safe by construction (DistPrefixSpec evicts every
+  * cache between runs and pins bit-equality). The totals frame is NOT
+  * persisted: a cached frame plans its own copy of the cuts subquery,
+  * which ReuseSubquery cannot share with the query's, so persisting it
+  * would run the count and sample jobs a second time per action.
   *
   * Cost: ZERO driver actions at plan-construction time (r16 — explain
   * and plan audits execute nothing; the count + sample run as part of
@@ -302,11 +304,11 @@ object Dist {
       count(lit(1)).as("__dp_cnt") +:
         (cums.map { case (name, e) => sum(e).as(s"__dp_t_$name") } ++
          maxPrev.map { case (name, e) => max(e).as(s"__dp_m_$name") })
-    // persisted: the tiny totals frame is read by the offsets subquery
-    // and again by the lead stitch — caching it makes the input-cache
-    // re-aggregation run once; recompute-safe like the input persist
-    val offs = graft.Iter.share(ordered.groupBy(partCols.map(col): _*)
-      .agg(totAggs.head, totAggs.tail: _*))
+    // not persisted (see the scaladoc): the offsets subquery is its one
+    // reader; the lead stitch, which reads it again, aggregates the
+    // persisted input a second time
+    val offs = ordered.groupBy(partCols.map(col): _*)
+      .agg(totAggs.head, totAggs.tail: _*)
 
     val sameGroup = (l: String, r: String) =>
       part.foldLeft(lit(true))((c, k) => c && col(s"$l.$k") <=> col(s"$r.$k"))

@@ -138,8 +138,8 @@ class DistPrefixSpec extends AnyFunSuite {
   }
 
   /** r16 (r15 verdict ask #2): the executor-loss/eviction story must
-    * be a TEST, not prose. The tier persists its input and totals
-    * frames as compute-once optimizations; evicting BOTH after plan
+    * be a TEST, not prose. The tier persists its input as a
+    * compute-once optimization; evicting it after plan
     * construction — and again after a first materialization — must
     * leave results bit-identical, because the bucket pipeline is a
     * pure function of the data multiset (hash-gated sample, in-plan

@@ -44,7 +44,29 @@ class ProbeSpec extends AnyFunSuite {
       Probe.drainBus(spark)
       assert(l.snapshot.tasks > 0)
       l.reset()
-      assert(l.snapshot == Probe.Counts(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil))
+      assert(l.snapshot == Probe.Counts(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil))
+    }
+  }
+
+  test("codegen counts: new generated code compiles, the same code again does not") {
+    // a long literal is inlined into the generated source, so a value no
+    // earlier query used makes classes this JVM has not compiled yet
+    // (max, not sum: a sum of nanoTime-sized values overflows under ANSI)
+    val unique = System.nanoTime()
+    def action(): Unit =
+      spark.range(0L, 1000L, 1L, 2)
+        .select((col("id") + lit(unique)).as("x"))
+        .agg(max(col("x")))
+        .collect()
+    withProbe { l =>
+      action()
+      val first = l.snapshot
+      assert(first.codegenCompiles >= 1, first)
+      assert(first.codegenCompileNs > 0, first)
+      l.reset()
+      action()
+      val again = l.snapshot
+      assert(again.codegenCompiles == 0 && again.codegenCompileNs == 0, again)
     }
   }
 
