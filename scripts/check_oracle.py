@@ -13,14 +13,13 @@ DuckDB runs under a memory limit and spills to a fresh temporary
 directory (removed at exit). A watcher thread interrupts the running
 oracle query once that directory takes more than TEMP_CAP_MB on disk,
 so a query whose plan blows up fails by name instead of filling the
-disk. DuckDB can keep writing for some seconds before it stops: a full
-sf0.1 run peaked at 16.5 GB of temp files. DuckDB's own `max_temp_directory_size` does not do this in 1.0:
-it counts the data DuckDB keeps in the directory, not the size of its
-files, and q_modularity's oracle at sf0.1 grew the directory to 18.7 GB
-under a 12 GB setting. The limits fit the heaviest passing oracles at
-sf0.1: q_graph_2hop and q_graph_reciprocity take 9–10 GB of temp files
-under the 8 GB memory limit, and q_attribution_markov needs more than
-3 GB of memory already at sf0.01. Each oracle query's wall time is
+disk (DuckDB can keep writing for some seconds after the interrupt).
+DuckDB 1.0's own `max_temp_directory_size` cannot do this: it bounds
+the data DuckDB keeps in the directory, not the size of its files.
+The limits fit the heaviest passing oracles at sf0.1: q_graph_2hop and
+q_graph_reciprocity take 9–10 GB of temp files under the 8 GB memory
+limit, and q_attribution_markov needs more than 3 GB of memory already
+at sf0.01. Each oracle query's wall time is
 printed on its PASS line or on its oracle-error FAIL line, and their
 sum before the summary line.
 """

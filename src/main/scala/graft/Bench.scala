@@ -21,33 +21,6 @@ object Bench {
     // copies) publish once per source state, OUTSIDE the timed loop —
     // the bench measures steady-state query throughput, not ingest;
     // the setup cost is printed so it is never invisible
-    // SPARK_GRAFT_STORAGE_REPORT=<path> — measure the `.shared` persist
-    // regime's storage footprint across the session (r17 verdict ask
-    // #3: 42 persist sites with no unpersist is the steady state; this
-    // makes its cost a number instead of an argument). Tracks the
-    // cached-RDD memory/disk occupancy after every query (peak + final)
-    // and counts blocks the BlockManager DROPPED (LRU eviction or
-    // explicit removal — under the bench neither graft nor the queries
-    // unpersist shared frames, so RDD-block drops ≈ eviction churn) and
-    // blocks DEMOTED memory→disk. Zero cost when unset; the driver
-    // never sets it.
-    val storageReport = sys.env.get("SPARK_GRAFT_STORAGE_REPORT")
-      .filter(_.nonEmpty)
-    val probe = storageReport.map(_ => Probe.listen(spark))
-    var peakMem, peakDisk, peakEntries = 0L
-    def pollStorage(): (Long, Long, Long) = {
-      // deprecated in favor of a listener, but it IS the one public API
-      // that reads current per-RDD cache occupancy in one call
-      val infos: Seq[(Long, Long)] =
-        spark.sparkContext.getRDDStorageInfo.toSeq
-          .map(i => (i.memSize, i.diskSize)): @annotation.nowarn("cat=deprecation")
-      val mem = infos.map(_._1).sum
-      val disk = infos.map(_._2).sum
-      peakMem = math.max(peakMem, mem)
-      peakDisk = math.max(peakDisk, disk)
-      peakEntries = math.max(peakEntries, infos.size.toLong)
-      (mem, disk, infos.size.toLong)
-    }
     val s0 = System.nanoTime()
     SparkEntry.prepareFixtures(spark, sfDir)
     System.err.println(
@@ -65,7 +38,6 @@ object Bench {
         System.err.println(
           s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
       }
-      if (storageReport.isDefined) pollStorage()
       name -> dt
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -108,23 +80,6 @@ object Bench {
       try Probe.writeAtomic(out, line + "\n")
       catch { case e: java.io.IOException =>
         System.err.println(s"[bench] could not write $out: $e") }
-    for (path <- storageReport; listener <- probe) {
-      // drain the listener bus so late BlockUpdated events are counted
-      Probe.drainBus(spark)
-      val counts = listener.snapshot
-      val (fm, fd, fe) = pollStorage()
-      val rep =
-        s"""{"peak_mem_bytes":$peakMem,"peak_disk_bytes":$peakDisk,""" +
-        s""""peak_entries":$peakEntries,"final_mem_bytes":$fm,""" +
-        s""""final_disk_bytes":$fd,"final_entries":$fe,""" +
-        s""""dropped_rdd_blocks":${counts.droppedRddBlocks},""" +
-        s""""demoted_rdd_blocks":${counts.demotedRddBlocks},""" +
-        s""""driver_xmx":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "16g")}"}"""
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), rep + "\n")
-      catch { case e: java.io.IOException =>
-        System.err.println(s"[bench] could not write $path: $e") }
-      System.err.println(s"[bench] storage report: $rep")
-    }
     spark.stop()
   }
 }

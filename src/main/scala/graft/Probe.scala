@@ -11,10 +11,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The dev tools' one instrumentation module: the Spark listener that
-  * [[Bench]] (storage report) and [[Profile]] (per-rep counters) read,
-  * the listener-bus drain that makes its counts final, the atomic
-  * record write, and the locale-independent number format of the JSON
-  * records. Nothing on the query path uses it. */
+  * [[Profile]] reads per rep, the listener-bus drain that makes its
+  * counts final, the atomic record write ([[Bench]], [[Profile]]), and
+  * the locale-independent number format of the JSON records. Nothing
+  * on the query path uses it. */
 object Probe {
 
   /** One reading of a [[Listener]]. Times are summed over tasks
@@ -29,7 +29,6 @@ object Probe {
       taskRunMs: Long, taskCpuNs: Long, gcMs: Long,
       spillMemBytes: Long, spillDiskBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long,
-      droppedRddBlocks: Long, demotedRddBlocks: Long,
       codegenCompiles: Long, codegenCompileNs: Long,
       jobMs: Seq[Double])
 
@@ -41,18 +40,17 @@ object Probe {
   private def codegenTotals: (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
-  /** Counts jobs, completed stages and tasks, sums the task metrics
+  /** Counts jobs, completed stages and tasks, and sums the task metrics
     * that separate executor work (run, CPU), memory pressure (GC,
-    * spill) and data motion (shuffle bytes), and counts cached-RDD
-    * blocks the BlockManager dropped (eviction or removal) or demoted
-    * memory→disk. Call [[Probe.drainBus]] before [[snapshot]] so late
-    * events are counted. The codegen counts are deltas of Spark's
-    * JVM-wide totals since construction or the last [[reset]]. */
+    * spill) and data motion (shuffle bytes). Call [[Probe.drainBus]]
+    * before [[snapshot]] so late events are counted. The codegen counts
+    * are deltas of Spark's JVM-wide totals since construction or the
+    * last [[reset]]. */
   final class Listener private[Probe] () extends SparkListener {
     private val jobs, stages, tasks, runMs, cpuNs, gcMs, spillMem,
-      spillDisk, shufRead, shufWrite, dropped, demoted = new AtomicLong
+      spillDisk, shufRead, shufWrite = new AtomicLong
     private val counters = Seq(jobs, stages, tasks, runMs, cpuNs, gcMs,
-      spillMem, spillDisk, shufRead, shufWrite, dropped, demoted)
+      spillMem, spillDisk, shufRead, shufWrite)
     private val starts = new ConcurrentHashMap[Int, Long]()
     private val jobMs = scala.collection.mutable.ArrayBuffer.empty[Double]
     @volatile private var codegenBase = codegenTotals
@@ -84,16 +82,6 @@ object Probe {
       }
     }
 
-    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
-      val info = e.blockUpdatedInfo
-      if (info.blockId.isRDD) {
-        val lvl = info.storageLevel
-        if (!lvl.isValid) dropped.incrementAndGet()
-        else if (lvl.useDisk && !lvl.useMemory && info.memSize == 0)
-          demoted.incrementAndGet()
-      }
-    }
-
     /** Zero every count (jobs still running keep their start time). */
     def reset(): Unit = {
       counters.foreach(_.set(0L))
@@ -106,7 +94,6 @@ object Probe {
       Counts(
         jobs.get, stages.get, tasks.get, runMs.get, cpuNs.get, gcMs.get,
         spillMem.get, spillDisk.get, shufRead.get, shufWrite.get,
-        dropped.get, demoted.get,
         compiles - codegenBase._1, compileNs - codegenBase._2,
         jobMs.synchronized { jobMs.toList })
     }

@@ -2,7 +2,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * A query that throws prints `[verify] <q> FAILED: <class>: <message>`
+  * to stderr and the remaining queries still run; the last stderr line
+  * names every failed query. Unlike Profile and PlanDump, the run exits
+  * 0 either way: the oracle compare reads the dumps query by query, so
+  * a missing dump already fails its own query, while a caller that
+  * treats a non-zero exit as a failed run could discard every other
+  * query's result with it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (iteration aid);
@@ -23,15 +31,20 @@ object Verify {
     sys.env.get("SPARK_GRAFT_ITER_CKPT_DIR").filter(_.nonEmpty)
       .foreach(spark.conf.set(Iter.CheckpointDirKey, _))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val picked = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    picked.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
+        System.err.println(
+          s"[verify] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
+    System.err.println(s"[verify] ${picked.size - failed.size} of " +
+      s"${picked.size} queries; failed: [${failed.mkString(",")}]")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -10,23 +10,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass strictly-prior prefix fold over [[Dist.prefix]]'s sorted
-  * per-bucket totals array (r19, the r18 verdict asks #1 and #2):
-  * `dist_fold(arr, g, c)` walks the (group keys…, pid)-sorted array of
-  * per-bucket totals ONCE and emits, positionally aligned with the
-  * input, each entry's strictly-prior-within-group offsets plus its
-  * group total.
-  *
-  * This replaces the r18 `transform`×`slice`×`aggregate` in-plan fold,
-  * whose interpreted higher-order lambdas re-aggregated the prior
-  * slice per index per field — O(buckets²·fields) struct reads on one
-  * task (~16.8M at the 4096-bucket cap). Here the fold is a single
-  * imperative O(buckets·fields) pass, run once per action on the
-  * 1-row scalar-subquery frame, and the same expression generalizes
-  * the r18 global-path redesign to GROUPED tiers: group-key changes
-  * reset the running accumulators, so the grouped offsets ride the
-  * same single subquery instead of the broadcast theta self-join +
-  * rollup (per-entry `gn` carries the group total the old conditional
-  * aggregates produced).
+  * per-bucket totals array: `dist_fold(arr, g, c)` walks the
+  * (group keys…, pid)-sorted array ONCE and emits, positionally aligned
+  * with the input, each entry's strictly-prior-within-group offsets
+  * plus its group total. Group-key changes reset the running
+  * accumulators; with `g = 0` the whole array is one group, so every
+  * entry's `gn` is the grand total. The cost is O(entries · fields) on
+  * the 1-row scalar-subquery frame, once per action.
   *
   * Input element layout (positional contract with [[Dist.prefix]]):
   * fields 0..g-1 = group key columns (the tier's `part`), field g =
@@ -36,12 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * and every remaining field = a per-bucket max (any orderable type,
   * nullable).
   *
-  * Output: struct(arr: array<struct(cnt, c1..cc, m1..mm, gn)>, gn) —
-  * `arr(i).cnt` / `c·` / `m·` are the sums/maxes over entries of the
-  * same group strictly before i (exact int64 adds in pid order ≡ the
-  * old per-join sums; maxes skip nulls exactly like `greatest`),
-  * `arr(i).gn` is entry i's group total, and the top-level `gn` is the
-  * grand total (the global path's group count; 0 on an empty array).
+  * Output: array<struct(cnt, c1..cc, m1..mm, gn)> — `arr(i).cnt` /
+  * `c·` / `m·` are the sums/maxes over entries of the same group
+  * strictly before i (exact int64 adds in pid order; maxes skip nulls
+  * like `greatest`), and `arr(i).gn` is entry i's group total. A NULL
+  * input array yields an empty array.
   *
   * Determinism: a pure function of the input array. Comparison
   * semantics for group-key equality and maxes match [[DistBucket]]
@@ -80,10 +69,7 @@ case class DistFold(children: Seq[Expression])
          (1 to m).map(j =>
            StructField(s"m$j", maxTypes(j - 1), nullable = true)) :+
          StructField("gn", LongType, nullable = false)))
-    StructType(Seq(
-      StructField("arr", ArrayType(entry, containsNull = false),
-        nullable = false),
-      StructField("gn", LongType, nullable = false)))
+    ArrayType(entry, containsNull = false)
   }
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -162,14 +148,11 @@ case class DistFold(children: Seq[Expression])
 
   override def eval(input: InternalRow): Any = {
     val arr = arrExpr.eval(input)
-    if (arr == null)
-      return new GenericInternalRow(
-        Array[Any](new GenericArrayData(Array.empty[Any]), 0L))
+    if (arr == null) return new GenericArrayData(Array.empty[Any])
     val data = arr.asInstanceOf[ArrayData]
     val n = data.numElements()
     val entryLen = 1 + c + m + 1
     val entries = new Array[Any](n)
-    var grand = 0L
     var runCnt = 0L
     val runC = new Array[Long](c)
     val runM = new Array[Any](m)
@@ -200,9 +183,7 @@ case class DistFold(children: Seq[Expression])
       var j = 0
       while (j < m) { e.update(1 + c + j, runM(j)); j += 1 }
       entries(i) = e
-      val cnt = row.getLong(g + 1)
-      runCnt += cnt
-      grand += cnt
+      runCnt += row.getLong(g + 1)
       k = 0
       while (k < c) { runC(k) += row.getLong(g + 2 + k); k += 1 }
       j = 0
@@ -220,7 +201,7 @@ case class DistFold(children: Seq[Expression])
       i += 1
     }
     closeGroup(n)
-    new GenericInternalRow(Array[Any](new GenericArrayData(entries), grand))
+    new GenericArrayData(entries)
   }
 
   override protected def withNewChildrenInternal(

@@ -2004,13 +2004,11 @@ object TimeSeriesOps {
     val tot = pv.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
                      count(lit(1)).as("n_support"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    // segment sum indexed from the segment's UPPER point (r18): the
-    // W₁ segment between consecutive support values y < x contributes
-    // (x − y)·|F_A(y)·n_b − F_B(y)·n_a|; reading it on row x with the
-    // strictly-prior cumulations (cum − own count) is term-for-term
-    // identical to the old lead1 form read on row y, but maxPrev rides
-    // the tier's offsets array for free while lead1 pays its own
-    // boundary-stitch joins (the plan sheds the firsts/nexts subtrees)
+    // segment sum indexed from the segment's UPPER point: the W₁
+    // segment between consecutive support values y < x contributes
+    // (x − y)·|F_A(y)·n_b − F_B(y)·n_a|, read on row x with the
+    // strictly-prior cumulations (cum − own count) and y = maxPrev,
+    // which rides the tier's offsets array at no extra cost
     val cum = graft.functions.Dist.prefix(pv, Nil, Seq(col("cents")),
         cums = Seq("cuma" -> col("ca"), "cumb" -> col("cb")),
         maxPrev = Seq("__prev" -> col("cents")))

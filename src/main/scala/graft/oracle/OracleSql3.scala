@@ -412,7 +412,10 @@ private[graft] object OracleSql3 {
                  + 0.0) AS mse
          FROM sc ORDER BY vec_id""",
     "q_graph_jaccard" ->
-      """WITH edges AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst
+      // `edges` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at
+      // every reference, and at sf0.1 that plan's temp files pass the
+      // oracle's temp-space cap; the result is unchanged
+      """WITH edges AS MATERIALIZED (SELECT c.c_nationkey AS src, s.s_nationkey AS dst
                         FROM lineitem l
                         JOIN orders o ON l.l_orderkey = o.o_orderkey
                         JOIN customer c ON o.o_custkey = c.c_custkey

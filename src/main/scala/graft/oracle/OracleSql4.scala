@@ -999,7 +999,10 @@ private[graft] object OracleSql4 {
     "q_assortativity" ->
       // degree assortativity of the undirected strong graph: Pearson r
       // over both orientations of every edge, exact sufficient sums
-      """WITH edges AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      // `edges` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at
+      // every reference, and at sf0.1 that plan's temp files pass the
+      // oracle's temp-space cap; the result is unchanged
+      """WITH edges AS MATERIALIZED (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                                count(*) AS w
                         FROM lineitem l
                         JOIN orders o ON l.l_orderkey = o.o_orderkey

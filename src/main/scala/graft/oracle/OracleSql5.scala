@@ -1524,7 +1524,10 @@ private[graft] object OracleSql5 {
     "q_local_clustering" ->
       // per-node clustering coefficient of the undirected strong graph:
       // connected neighbor pairs / deg·(deg−1)/2, exact ints, node spine
-      """WITH edges AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      // `edges` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at
+      // every reference, and at sf0.1 that plan's temp files pass the
+      // oracle's temp-space cap; the result is unchanged
+      """WITH edges AS MATERIALIZED (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                                count(*) AS w
                         FROM lineitem l
                         JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -1771,7 +1774,10 @@ private[graft] object OracleSql5 {
     "q_adamic_adar" ->
       // AA link prediction on the undirected strong graph: non-adjacent
       // pairs, 1/ln(deg z) folded in neighbor-id order (q_anova rule)
-      """WITH edges AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      // `edges` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at
+      // every reference, and at sf0.1 that plan's temp files pass the
+      // oracle's temp-space cap; the result is unchanged
+      """WITH edges AS MATERIALIZED (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                                count(*) AS w
                         FROM lineitem l
                         JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -2621,7 +2627,10 @@ private[graft] object OracleSql5 {
     "q_modularity" ->
       // Newman modularity of the region partition over the undirected
       // strong trade graph: exact int e_c/d_c/m, one r4'd chain
-      """WITH edges AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      // `edges` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at
+      // every reference, and at sf0.1 that plan's temp files pass the
+      // oracle's temp-space cap; the result is unchanged
+      """WITH edges AS MATERIALIZED (SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                                count(*) AS w
                         FROM lineitem l
                         JOIN orders o ON l.l_orderkey = o.o_orderkey

@@ -8,12 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Dist
 
 /** [[graft.functions.Dist.prefix]] must be BIT-EQUAL to the
-  * single-partition global window it replaces — these tests pin every
-  * primitive (running sum, row_number, rank/peer-count, lead stitch,
-  * ntile/cume_dist/percent_rank derivations) against the reference
-  * window on fixtures with ties, skewed groups, and row counts both
-  * below and above the range partition count (so partition boundaries,
-  * empty partitions, and the prior-offset join all exercise). */
+  * single-partition window it replaces — these tests pin every
+  * primitive (running sum, row_number, rank/peer-count, strictly-prior
+  * running max, group count, ntile/cume_dist/percent_rank derivations)
+  * against the reference window, for a global order (`part = Nil`) and
+  * a grouped one (`part = Seq("g")`), on fixtures with ties, skewed
+  * groups, and row counts both below and above the range partition
+  * count (so partition boundaries, empty partitions, and the
+  * prior-offset lookup all exercise). */
 class DistPrefixSpec extends AnyFunSuite {
   import TestBase.spark
   import spark.implicits._
@@ -32,15 +34,42 @@ class DistPrefixSpec extends AnyFunSuite {
     df.orderBy(cols.head).select(cols.map(col): _*)
       .collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
-  test("global running sum + row_number match the single-partition window") {
-    val w = Window.orderBy(col("v"), col("k"))
-    val ref = base
+  /** The two window shapes every reference comparison runs: one global
+    * order and one grouped by `g`. Both go through the same offsets
+    * path. */
+  private val shapes: Seq[Seq[String]] = Seq(Nil, Seq("g"))
+
+  /** Every output kind of the tier (columns g, v, k, x) against the
+    * reference window over `part`: cs, rn, pm and n in the total order
+    * (v, k); rk and le in the order v alone, so tie blocks exercise
+    * peer semantics. */
+  private def assertMatchesReference(df: DataFrame, part: Seq[String],
+                                     parts: Int): Unit = {
+    val wp = Window.partitionBy(part.map(col): _*)
+    val wt = wp.orderBy(col("v"), col("k"))
+    val wv = wp.orderBy(col("v"))
+    val ref = df
       .withColumn("cs", sum(col("x")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("rn", row_number().over(w).cast("long"))
-    val got = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
-      cums = Seq("cs" -> col("x")), rowNum = Some("rn"), parts = 7)
-    assert(sortedRows(got, "k", "cs", "rn") == sortedRows(ref, "k", "cs", "rn"))
+        wt.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("rn", row_number().over(wt).cast("long"))
+      .withColumn("pm", max(col("x")).over(
+        wt.rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("n", count(lit(1)).over(wp))
+      .withColumn("rk", rank().over(wv).cast("long"))
+      .withColumn("le", count(lit(1)).over(wv))
+    val total = Dist.prefix(df, part, Seq(col("v"), col("k")),
+      cums = Seq("cs" -> col("x")), rowNum = Some("rn"),
+      groupN = Some("n"), maxPrev = Seq("pm" -> col("x")), parts = parts)
+    val peers = Dist.prefix(df, part, Seq(col("v")),
+      rankLe = Some(("rk", "le")), parts = parts)
+    val got = total.join(peers.select("k", "rk", "le"), "k")
+    val cols = Seq("k", "cs", "rn", "pm", "n", "rk", "le")
+    assert(sortedRows(got, cols: _*) == sortedRows(ref, cols: _*),
+      s"part=$part parts=$parts diverged from the reference window")
+  }
+
+  test("global running sum + row_number match the single-partition window") {
+    assertMatchesReference(base, Nil, 7)
   }
 
   test("descending order matches (the q_abc_pareto / q_pr_curve shape)") {
@@ -55,51 +84,33 @@ class DistPrefixSpec extends AnyFunSuite {
   test("rank + peer count + derived cume_dist/percent_rank match, with ties") {
     // order by v ALONE — every tie block crosses hash partitions in the
     // input and must land whole in one range partition
-    val w = Window.orderBy(col("v"))
-    val ref = base
-      .withColumn("cd", cume_dist().over(w))
-      .withColumn("pr", percent_rank().over(w))
-    val got0 = Dist.prefix(base, Nil, Seq(col("v")),
-      rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
-    val got = got0
-      .withColumn("cd", Dist.cumeDistOf(col("le"), col("n")))
-      .withColumn("pr", Dist.percentRankOf(col("rk"), col("n")))
-    assert(sortedRows(got, "k", "cd", "pr") == sortedRows(ref, "k", "cd", "pr"))
+    for (part <- shapes) {
+      val w = Window.partitionBy(part.map(col): _*).orderBy(col("v"))
+      val ref = base
+        .withColumn("cd", cume_dist().over(w))
+        .withColumn("pr", percent_rank().over(w))
+      val got = Dist.prefix(base, part, Seq(col("v")),
+          rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
+        .withColumn("cd", Dist.cumeDistOf(col("le"), col("n")))
+        .withColumn("pr", Dist.percentRankOf(col("rk"), col("n")))
+      assert(sortedRows(got, "k", "cd", "pr") == sortedRows(ref, "k", "cd", "pr"),
+        s"part=$part")
+    }
   }
 
   test("grouped: per-group sums/ranks match a partitioned window split across ranges") {
-    val w = Window.partitionBy(col("g")).orderBy(col("v"), col("k"))
-    val ref = base
-      .withColumn("cs", sum(col("x")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("cd", cume_dist().over(
-        Window.partitionBy(col("g")).orderBy(col("v"))))
-    val got0 = Dist.prefix(base, Seq("g"), Seq(col("v"), col("k")),
-      cums = Seq("cs" -> col("x")), rowNum = Some("rn"), parts = 7)
-    // cume_dist orders by v alone (peer semantics) — second call
-    val got1 = Dist.prefix(base, Seq("g"), Seq(col("v")),
-      rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
-      .withColumn("cd", Dist.cumeDistOf(col("le"), col("n")))
-    assert(sortedRows(got0, "k", "cs", "rn") == sortedRows(ref, "k", "cs", "rn"))
-    assert(sortedRows(got1, "k", "cd") == sortedRows(ref, "k", "cd"))
+    assertMatchesReference(base, Seq("g"), 7)
   }
 
   test("maxPrev (running max over strictly-prior rows) matches, incl. the NULL first row") {
-    val w = Window.orderBy(col("v"), col("k"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ref = base.withColumn("pm", max(col("x")).over(w))
-    val got = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
-      maxPrev = Seq("pm" -> col("x")), parts = 7)
-    assert(sortedRows(got, "k", "pm") == sortedRows(ref, "k", "pm"))
-  }
-
-  test("lead(x,1) stitches across range-partition boundaries") {
-    val w = Window.orderBy(col("v"), col("k"))
-    val ref = base.withColumn("nx", lead(col("k"), 1).over(w))
-    val got = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
-      lead1 = Some(("k", "nx")), parts = 7)
-    assert(sortedRows(got, "k", "nx") == sortedRows(ref, "k", "nx"))
+    for (part <- shapes) {
+      val w = Window.partitionBy(part.map(col): _*).orderBy(col("v"), col("k"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val ref = base.withColumn("pm", max(col("x")).over(w))
+      val got = Dist.prefix(base, part, Seq(col("v"), col("k")),
+        maxPrev = Seq("pm" -> col("x")), parts = 7)
+      assert(sortedRows(got, "k", "pm") == sortedRows(ref, "k", "pm"), s"part=$part")
+    }
   }
 
   test("ntileOf reproduces Spark ntile at the bucket-boundary n values") {
@@ -148,9 +159,8 @@ class DistPrefixSpec extends AnyFunSuite {
   test("cache eviction at every point leaves results bit-identical") {
     def mk() = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
       cums = Seq("cs" -> col("x")), rowNum = Some("rn"),
-      rankLe = Some(("rk", "le")), groupN = Some("n"),
-      lead1 = Some(("k", "nx")), parts = 7)
-    val cols = Seq("k", "cs", "rn", "rk", "le", "n", "nx")
+      rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
+    val cols = Seq("k", "cs", "rn", "rk", "le", "n")
     // evict between plan construction and the first action
     val df1 = mk()
     spark.sqlContext.clearCache()
@@ -176,8 +186,7 @@ class DistPrefixSpec extends AnyFunSuite {
     try {
       val df = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
         cums = Seq("cs" -> col("x")), rowNum = Some("rn"),
-        rankLe = Some(("rk", "le")), groupN = Some("n"),
-        lead1 = Some(("k", "nx")), parts = 7)
+        rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
       df.queryExecution.optimizedPlan // force analysis + optimization
       df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -190,22 +199,18 @@ class DistPrefixSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** r16 (r15 verdict ask #5): bucket counts past the old 1024
-    * literal-tree cap. 2048 requested buckets over 5000 rows exercises
-    * DistBucket's binary search on a ~2000-cut array — bit-equal to
-    * the single-partition window. */
+  /** Bucket counts past the old 1024 literal-tree cap. 2048 requested
+    * buckets over 5000 rows exercises DistBucket's binary search on a
+    * ~2000-cut array, and the offsets lookup on a ~2000-entry array
+    * (global) or ~2000 + 3 entries (grouped) — bit-equal to the
+    * reference window for every output kind. */
   test("bucket counts past the old 1024 cap match the reference window") {
     val big = (1 to 5000)
-      .map(i => (((i * 131) % 977).toLong, i.toLong)).toDF("v", "k")
+      .map(i => (s"g${i % 3}", ((i * 131) % 977).toLong, i.toLong,
+                 ((i * 13) % 11).toLong))
+      .toDF("g", "v", "k", "x")
       .repartition(7)
-    val w = Window.orderBy(col("v"), col("k"))
-    val ref = big
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("cs", sum(col("k")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val got = Dist.prefix(big, Nil, Seq(col("v"), col("k")),
-      cums = Seq("cs" -> col("k")), rowNum = Some("rn"), parts = 2048)
-    assert(sortedRows(got, "k", "rn", "cs") == sortedRows(ref, "k", "rn", "cs"))
+    shapes.foreach(assertMatchesReference(big, _, 2048))
   }
 
   /** r17 (r16 ADVICE): DistBucket's INTERPRETED eval must use Spark's
@@ -249,90 +254,79 @@ class DistPrefixSpec extends AnyFunSuite {
     assert(bucketOf(Seq(1.0, 2.0, 3.0), 2.5) == ((2, 2)))
   }
 
-  /** r19: the grouped path's offsets ride one scalar subquery
-    * ([[graft.functions.DistFold]] prefix fold + dist_bucket lookup).
-    * It must be bit-equal to the reference window, including on NULL
-    * group keys (the fold's group-change comparator and the lookup's
-    * nulls-first spec both place nulls like the sort). */
+  /** The offsets ride one scalar subquery ([[graft.functions.DistFold]]
+    * prefix fold + dist_bucket lookup). It must be bit-equal to the
+    * reference window on NULL group keys too (the fold's group-change
+    * comparator and the lookup's nulls-first spec both place nulls
+    * like the sort). */
   test("grouped subquery path == reference, incl. null groups") {
     val withNulls = base.withColumn("g",
       when(col("k") % 5 === 0, lit(null: String)).otherwise(col("g")))
-    val w = Window.partitionBy(col("g")).orderBy(col("v"), col("k"))
-    val ref = withNulls
-      .withColumn("cs", sum(col("x")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("pm", max(col("x")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
-    val got = Dist.prefix(withNulls, Seq("g"),
-      Seq(col("v"), col("k")), cums = Seq("cs" -> col("x")),
-      rowNum = Some("rn"), groupN = Some("n"),
-      maxPrev = Seq("pm" -> col("x")), parts = 7)
-    val cols = Seq("k", "cs", "rn", "pm", "n")
-    assert(sortedRows(got, cols: _*) == sortedRows(ref, cols: _*),
-      "subquery grouped path diverged from window")
+    assertMatchesReference(withNulls, Seq("g"), 7)
   }
 
-  /** r19: the grouped path must carry NO join for the offsets
-    * stitch — the whole point of the subquery redesign is zero join
-    * machinery (and two fewer broadcast builds) per action. */
+  /** The offsets lookup carries NO join, global or grouped: the totals
+    * reach every row through the scalar subquery. */
   test("grouped subquery path plans no offsets join") {
-    val joins = Dist.prefix(base, Seq("g"),
-        Seq(col("v"), col("k")), cums = Seq("cs" -> col("x")),
-        groupN = Some("n"), parts = 7)
-      .queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.size
-    assert(joins == 0, "grouped subquery path still plans a join")
+    for (part <- shapes) {
+      val joins = Dist.prefix(base, part,
+          Seq(col("v"), col("k")), cums = Seq("cs" -> col("x")),
+          groupN = Some("n"), parts = 7)
+        .queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+        }.size
+      assert(joins == 0, s"part=$part: the offsets lookup plans a join")
+    }
   }
 
-  /** r19: [[graft.functions.DistFold]] pinned directly against a brute
+  /** [[graft.functions.DistFold]] pinned directly against a brute
     * force over the same array — strictly-prior sums/maxes reset per
-    * group, per-entry group totals, null maxes skipped, empty input. */
+    * group, per-entry group totals, null maxes skipped, empty input —
+    * with one group key (g = 1) and with none (g = 0: the whole array
+    * is one group, so every entry's total is the grand total). */
   test("dist_fold matches a brute-force prefix walk") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
     import org.apache.spark.sql.types._
     import graft.functions.DistFold
-    // layout: g=1 key (long), pid int, cnt long, c=1 cum long, m=1 max
-    // (nullable long)
-    val elem = StructType(Seq(
-      StructField("k0", LongType), StructField("pid", IntegerType),
-      StructField("cnt", LongType), StructField("c1", LongType),
-      StructField("m1", LongType)))
+    // (group key, pid, cnt, c1 cum, m1 nullable max)
     val rows: Seq[(Long, Int, Long, Long, Option[Long])] = Seq(
       (1L, 0, 3L, 10L, Some(5L)), (1L, 1, 2L, 7L, None),
       (1L, 2, 4L, 1L, Some(9L)), (2L, 3, 1L, 2L, None),
       (3L, 4, 6L, 6L, Some(2L)), (3L, 5, 2L, 3L, Some(1L)))
-    val arr = new GenericArrayData(rows.map { case (k, p, n, c1, m1) =>
-      new GenericInternalRow(
-        Array[Any](k, p, n, c1, m1.map(Long.box).orNull)): Any
-    }.toArray)
-    val e = DistFold(Seq(
-      Literal.create(arr, ArrayType(elem)), Literal(1), Literal(1)))
-    val got = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
-    val entries = got.getArray(0)
-    assert(got.getLong(1) == rows.map(_._3).sum) // grand total
-    // brute force per entry
-    rows.zipWithIndex.foreach { case ((k, _, _, _, _), i) =>
-      val prior = rows.take(i).filter(_._1 == k)
-      val grp = rows.filter(_._1 == k)
-      val ent = entries.getStruct(i, 4)
-      assert(ent.getLong(0) == prior.map(_._3).sum, s"cnt@$i")
-      assert(ent.getLong(1) == prior.map(_._4).sum, s"c1@$i")
-      val pm = prior.flatMap(_._5)
-      if (pm.isEmpty) assert(ent.isNullAt(2), s"m1@$i should be null")
-      else assert(ent.getLong(2) == pm.max, s"m1@$i")
-      assert(ent.getLong(3) == grp.map(_._3).sum, s"gn@$i")
+    val tail = Seq(StructField("pid", IntegerType),
+      StructField("cnt", LongType), StructField("c1", LongType),
+      StructField("m1", LongType))
+    def fold(g: Int, elems: Seq[Array[Any]]): ArrayData = {
+      val elem = StructType(
+        (if (g == 1) Seq(StructField("k0", LongType)) else Nil) ++ tail)
+      val arr = new GenericArrayData(
+        elems.map(new GenericInternalRow(_): Any).toArray)
+      DistFold(Seq(Literal.create(arr, ArrayType(elem)), Literal(g),
+          Literal(1)))
+        .eval(InternalRow.empty).asInstanceOf[ArrayData]
     }
-    // empty array: empty entries, zero grand total
-    val empty = DistFold(Seq(
-      Literal.create(new GenericArrayData(Array.empty[Any]),
-        ArrayType(elem)), Literal(1), Literal(1)))
-      .eval(InternalRow.empty).asInstanceOf[InternalRow]
-    assert(empty.getArray(0).numElements() == 0 && empty.getLong(1) == 0L)
+    for (g <- Seq(1, 0)) {
+      val entries = fold(g, rows.map { case (k, p, n, c1, m1) =>
+        val vals = Array[Any](p, n, c1, m1.map(Long.box).orNull)
+        if (g == 1) Array[Any](k) ++ vals else vals
+      })
+      val groupOf = (r: (Long, Int, Long, Long, Option[Long])) =>
+        if (g == 1) r._1 else 0L
+      rows.zipWithIndex.foreach { case (r, i) =>
+        val prior = rows.take(i).filter(groupOf(_) == groupOf(r))
+        val grp = rows.filter(groupOf(_) == groupOf(r))
+        val ent = entries.getStruct(i, 4)
+        assert(ent.getLong(0) == prior.map(_._3).sum, s"g=$g cnt@$i")
+        assert(ent.getLong(1) == prior.map(_._4).sum, s"g=$g c1@$i")
+        val pm = prior.flatMap(_._5)
+        if (pm.isEmpty) assert(ent.isNullAt(2), s"g=$g m1@$i should be null")
+        else assert(ent.getLong(2) == pm.max, s"g=$g m1@$i")
+        assert(ent.getLong(3) == grp.map(_._3).sum, s"g=$g gn@$i")
+      }
+    }
+    assert(fold(1, Nil).numElements() == 0, "empty input, empty entries")
   }
 
   /** Group keys and maxes are compared through a Comparable cast; a
@@ -364,8 +358,7 @@ class DistPrefixSpec extends AnyFunSuite {
   test("plans carry no unpartitioned window and no cartesian product") {
     val got = Dist.prefix(base, Nil, Seq(col("v"), col("k")),
       cums = Seq("cs" -> col("x")), rowNum = Some("rn"),
-      rankLe = Some(("rk", "le")), groupN = Some("n"),
-      lead1 = Some(("k", "nx")), parts = 7)
+      rankLe = Some(("rk", "le")), groupN = Some("n"), parts = 7)
     val qe = got.queryExecution
     qe.optimizedPlan.foreach {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window =>

@@ -44,7 +44,7 @@ class ProbeSpec extends AnyFunSuite {
       Probe.drainBus(spark)
       assert(l.snapshot.tasks > 0)
       l.reset()
-      assert(l.snapshot == Probe.Counts(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil))
+      assert(l.snapshot == Probe.Counts(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil))
     }
   }
 
