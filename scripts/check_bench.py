@@ -7,6 +7,11 @@ the re-run adjudication protocol (BASELINE.md).
 Usage:
     python3 scripts/check_bench.py [bench.json]   # default /tmp/graft_bench.json
 
+When Bench's per-query record sits beside the bench record (`X.json` ->
+`X_queries.json`), each FLAG and NEW line also carries that query's
+rep-1 counters: construction seconds, jobs, stages, tasks and summed task
+run seconds, so a flag reads against the work that explains it.
+
 Bench totals vary up to +-40% between idle runs on this host (BASELINE.md),
 so a single total cannot attribute a regression to a query. The committed
 band makes it attributable: a query is flagged only when it exceeds
@@ -23,6 +28,26 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def load_counters(bench_path: str) -> dict:
+    """query -> its rep-1 counter note, from Bench's per-query record
+    beside `bench_path`; {} when there is none."""
+    path = os.path.splitext(bench_path)[0] + "_queries.json"
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        rec = json.load(f)
+    notes = {}
+    for r in rec.get("results", []):
+        if not r.get("counters"):
+            continue
+        c = r["counters"][0]
+        notes[r["query"]] = (
+            f" [construct {r['construct_s'][0]:.2f} s, {c['jobs']} jobs, "
+            f"{c['stages']} stages, {c['tasks']} tasks, "
+            f"task-run {c['task_run_ms'] / 1000.0:.2f} s]")
+    return notes
+
+
 def main() -> int:
     bench_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft_bench.json"
     with open(os.path.join(REPO, "BASELINE_QUERIES.json")) as f:
@@ -31,6 +56,7 @@ def main() -> int:
         rec = json.loads(f.read().strip().splitlines()[-1])
 
     refs = ref["queries_sec"]
+    notes = load_counters(bench_path)
     # Bench names every query that threw in `failed`; its entry in
     # `queries` is the time to the failure, not a result
     failed = sorted(rec.get("failed", []))
@@ -69,7 +95,7 @@ def main() -> int:
           f"{median_ratio:.3f}")
     for name, sec in new:
         print(f"  NEW   {name}: {sec:.2f} s (no reference yet -- append one "
-              "after two clean runs)")
+              "after two clean runs)" + notes.get(name, ""))
     for name in failed:
         print(f"  FAILED {name}: the query threw (see the [bench] stderr line)")
     if uniform:
@@ -77,7 +103,8 @@ def main() -> int:
               "uniformly -- re-run on an idle host before chasing regressions")
         return 1 if failed else 0
     for name, sec, r, why in flagged:
-        print(f"  FLAG {name}: {sec:.2f} s vs reference {r} s ({why})")
+        print(f"  FLAG {name}: {sec:.2f} s vs reference {r} s ({why})"
+              + notes.get(name, ""))
     if flagged:
         print(f"{len(flagged)} flag(s) -- adjudicate per protocol "
               "(BASELINE.md): a flag is ATTRIBUTABLE only when it "

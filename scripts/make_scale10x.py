@@ -3,8 +3,8 @@
 
 Takes /root/testdata/sf0.1 and publishes /tmp/graft_scale10x: every
 TPC-H-ish table is copied verbatim (the scaling study times only the
-heavy document/embedding/event families; SPARK_GRAFT_ONLY restricts the
-bench), while documents, embeddings and events are expanded to 10 shards:
+heavy document/embedding/event families; naming them after `graft.Bench`
+restricts the bench), while documents, embeddings and events are expanded to 10 shards:
 
 - documents: shard k offsets doc_id by k*stride and, for k>0, suffixes
   every whitespace token with "zq<k>" — WITHIN-shard near-dup structure

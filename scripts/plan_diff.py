@@ -12,6 +12,12 @@ that share a name:
   - lambda class names    `Foo$$Lambda$12/0x..` -> `Foo$$Lambda`
   - object hashes         `UnsafeArrayData@5f3a2b1c` -> `UnsafeArrayData@H`
 
+and renumbers lambda variables: Spark names a Scala-API lambda variable
+`x_<n>` from one JVM-wide counter, so per file the distinct names are
+renumbered 1, 2, ... in order of first appearance (`lambda x_6`, `lambda
+y_7`, `lambda x_9` -> `x_1`, `y_2`, `x_3`). A lambda added or removed still
+shows as a difference.
+
 A file present in only one directory counts as differing. Dump both sides
 with the same <suffix> so the file names match, e.g.
 
@@ -35,10 +41,23 @@ MASKS = [
 ]
 
 
+LAMBDA_VAR = re.compile(r"(?<=lambda )(\w+)_(\d+)(?=#)")
+
+
+def renumber_lambdas(text: str) -> str:
+    seen = {}
+
+    def repl(m):
+        n = seen.setdefault(m.group(0), len(seen) + 1)
+        return f"{m.group(1)}_{n}"
+
+    return LAMBDA_VAR.sub(repl, text)
+
+
 def mask(text: str) -> str:
     for pattern, repl in MASKS:
         text = pattern.sub(repl, text)
-    return text
+    return renumber_lambdas(text)
 
 
 def read_masked(path: str) -> str:

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session configuration — one builder shared by every entry
-  * point: [[Bench]], [[Verify]], [[PlanDump]], [[Profile]], the
-  * benchmark harness and the test suite's `TestBase` — so the plans the
-  * DuckDB oracle verifies and the plans `PlanSpec` guards are the SAME plans the benchmark times (r8
+  * point: the tools [[Bench]], [[Verify]] and [[PlanDump]] (through
+  * [[local]]), the benchmark harness and the test suite's `TestBase` —
+  * so the plans the DuckDB oracle verifies and the plans `PlanSpec` guards are the SAME plans the benchmark times (r8
   * advice: a 10–32 MB join side must not take a broadcast shape in
   * bench and a shuffle shape in verify).
   *
@@ -121,6 +121,15 @@ object GraftSession {
       .config("spark.sql.queryExecutionListeners",
         classOf[SignalsListener].getName)
       .withExtensions(new graft.plans.GraftExtensions)
+
+  /** The tools' session: `local[n]` with n shuffle partitions, n from
+    * SPARK_GRAFT_CPUS (default 4), Spark's log at WARN. */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Run `body` with spark.sql.shuffle.partitions temporarily set to
     * `n` — the partition-count lever for iterative loops and stream

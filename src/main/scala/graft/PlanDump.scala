@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * the EXECUTED plan's shape.
   *
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [q ...]"
-  * (no query names = every SparkEntry query). It runs in two passes:
+  * (no query names = every query, in inventory order). It runs in two
+  * passes:
   *
   *  1. per query, writes `.explain("formatted")` of the plan BEFORE
   *     execution — the pre-execution AdaptiveSparkPlan the per-round
@@ -67,31 +68,22 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val names =
-      if (args.length > 3) args.drop(3).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val picked = SparkEntry.select(args.toSeq.drop(3))
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def each(body: (String, DataFrame) => Unit): Unit =
-      for (n <- names if !failed(n))
-        try body(n, SparkEntry.queries(n)(spark, sfDir))
-        catch { case e: Throwable =>
-          failed += n
-          System.err.println(
-            s"[plandump] $n FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        }
-    each { (n, df) =>
-      Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), formatted(df))
+    val unplanned = SparkEntry.eachQuery("plandump", picked) { (n, fn) =>
+      Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"),
+        formatted(fn(spark, sfDir)))
     }
     Iter.clearShared(spark)
-    each { (n, df) =>
+    val failed = unplanned ++ SparkEntry.eachQuery("plandump",
+        picked.filterNot { case (n, _) => unplanned.contains(n) }) { (n, fn) =>
+      val df = fn(spark, sfDir)
       df.collect() // materialize: AQE finalizes stages, codegen ids exist
       println(audit(n, df))
     }
-    println(s"[plandump] ${names.size - failed.size} of ${names.size} queries; " +
+    println(s"[plandump] ${picked.size - failed.size} of ${picked.size} queries; " +
       s"failed: [${failed.mkString(",")}]")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

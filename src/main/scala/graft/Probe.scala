@@ -10,11 +10,11 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-/** The dev tools' one instrumentation module: the Spark listener that
-  * [[Profile]] reads per rep, the listener-bus drain that makes its
-  * counts final, the atomic record write ([[Bench]], [[Profile]]), and
-  * the locale-independent number format of the JSON records. Nothing
-  * on the query path uses it. */
+/** The tools' one instrumentation module: the Spark listener that
+  * [[Bench]] reads per rep, the listener-bus drain that makes its
+  * counts final, the atomic record write of Bench's records, and the
+  * locale-independent number format of the JSON records. Nothing on the
+  * query path uses it. */
 object Probe {
 
   /** One reading of a [[Listener]]. Times are summed over tasks

@@ -56,15 +56,43 @@ object SparkEntry {
     graft.streaming.StreamingOps.prepareGatedStreams(spark, d)
   }
 
+  /** A query: (session, data dir) => its result frame. */
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The queries a tool runs, the one selection rule of Bench, Verify
+    * and PlanDump: the names given, in that order, or every query in
+    * inventory order when none is given. An unknown name throws
+    * (naming it) before the caller builds a session. */
+  def select(names: Seq[String]): Seq[(String, Query)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
+  /** Runs `body` per query; a query that throws prints `[<tool>] <q>
+    * FAILED: <class>: <message>` to stderr and the rest still run.
+    * Returns the names that threw, in run order. */
+  def eachQuery(tool: String, qs: Seq[(String, Query)])(
+      body: (String, Query) => Unit): Seq[String] =
+    qs.flatMap { case (n, fn) =>
+      try { body(n, fn); None }
+      catch { case e: Throwable =>
+        System.err.println(
+          s"[$tool] $n FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        Some(n)
+      }
+    }
+
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * Insertion-ordered (ListMap) ON PURPOSE: Bench and Verify iterate in
+    * Insertion-ordered (ListMap) ON PURPOSE: the tools iterate in
     * map order, and the FIRST query executed pays the one-time JIT /
     * codegen / session warm-up (~5 s) on top of its own cost. A hash Map
     * hands that bill to an arbitrary real query each run; pinning the
     * cheapest query (q_text_quality, ~0.06 s intrinsic) first makes the
     * warm-up cost visible as exactly one line instead of noise. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = scala.collection.immutable.ListMap(
+  def queries: Map[String, Query] = scala.collection.immutable.ListMap(
     // JIT/warm-up absorber — keep the cheapest query first (see scaladoc)
     "q_text_quality" -> (L.textQuality _),
     // §2.1 scans

@@ -478,7 +478,16 @@ object CurationOps {
     * same unique fixpoint (component = min reachable id), so the
     * fallback changes cost, never results — suite-checked on a chain
     * deeper than the propagation budget. A ccStars failure still fails
-    * loudly: past its bound something is genuinely wrong. */
+    * loudly: past its bound something is genuinely wrong.
+    *
+    * Why both paths stay: a stars-only `cc` (same edge persist and
+    * partition sizing) gave identical components but was slower on
+    * every edge set the queries build (local[4], 5 alternating reps):
+    * benchmark-corpus cluster-store edges 1.40 → 2.09 s (37 → 50 jobs),
+    * sf0.1 embedding edges 1.21 → 2.20 s (29 → 50 jobs), sf0.01 trade
+    * edges 0.98 → 2.17 s (21 → 40 jobs). These graphs are shallow, so
+    * propagation converges in a few cheap rounds; stars covers the deep
+    * components propagation cannot. */
   def cc(edges: DataFrame, maxIter: Int = 64): DataFrame = {
     // persist the edge list across the attempt: on fallback ccStars
     // must not re-derive it from its (possibly expensive) lineage —
@@ -521,9 +530,9 @@ object CurationOps {
     * Convergence = edge set unchanged (checked with exceptAll both
     * ways — the potential argument in the paper guarantees progress, a
     * scalar proxy does not prove set equality). Suite-checked
-    * equivalent to ccMinLabel; kept as the documented alternative path
-    * because near-dup graphs are shallow in practice and propagation
-    * is cheaper per round. */
+    * equivalent to ccMinLabel; [[cc]] runs it only when propagation
+    * exhausts its round budget (see there for the measured cost of
+    * running it alone). */
   def ccStars(edges0: DataFrame, maxIter: Int = 32,
               iterParts: Int = CcIterParts): DataFrame =
       GraftSession.withShufflePartitions(edges0.sparkSession, iterParts) {

@@ -1113,7 +1113,7 @@ object WindowOps {
     // channel-vocabulary-bounded frames. Every lookup below now rides
     // a SCALAR SUBQUERY bound once (the Dist-tier idiom): one 1-row
     // struct carries chId's name→id and id→name maps plus m and S; the
-    // dense matrix probability reads a (fid·10⁶ + tid)→n map and a
+    // dense matrix probability reads a (fid·S + tid)→n map and a
     // fid→outn map, so the S² spine needs NO join at all and the
     // removed-channel probability pc is the SAME cell formula evaluated
     // at (fid, scenario) — (fid, scenario) is always a spine cell, so
@@ -1145,10 +1145,12 @@ object WindowOps {
         when(col("t") === "__CONV__", col("__ch.m") + 1)
           .when(col("t") === "__NULL__", col("__ch.m") + 2)
           .otherwise(element_at(col("__ch.c2i"), col("t"))).as("tid"),
-        col("n"))
-    // cell stride 10⁶ sits safely above any S (S = |channels| + 3)
-    val cellKey = (f: Column, t: Column) =>
-      f.cast("long") * 1000000L + t
+        col("n"), col("__ch.S").as("S"))
+      // a corpus with no channel state (every journey purchase-only)
+      // has m = NULL, so CONV's id is NULL: no cell, and no NULL map key
+      .filter(col("tid").isNotNull)
+    // 0 ≤ fid, tid < S, so the stride S gives every cell its own key
+    val cellKey = (f: Column, t: Column) => f.cast("long") * col("S") + t
     val nMap = tr2.agg(map_from_entries(collect_list(struct(
         cellKey(col("fid"), col("tid")).as("k"), col("n").as("v"))))
       .as("m")).scalar()

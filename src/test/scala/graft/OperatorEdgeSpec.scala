@@ -1751,4 +1751,17 @@ class OperatorEdgeSpec extends AnyFunSuite {
     assert(out == Seq(("a", 0.0, true, true), ("b", 0.0, true, true)),
       s"got $out")
   }
+
+  test("attribution_markov: purchase-only corpus has no channels and reports no rows") {
+    // every journey is a direct conversion: the only transition is
+    // START -> CONV, the channel vocabulary is empty, so m and S are
+    // NULL and the CONV id is NULL; the DuckDB oracle returns no rows
+    val dir = tmpDir("markov_purchase_only")
+    writeEvents(dir, Seq(
+      eventRow(1L, 100L, 1L, "purchase", 5.0),
+      eventRow(2L, 200L, 2L, "purchase", 7.0),
+      eventRow(3L, 300L, 2L, "purchase", 9.0)))
+    val out = graft.operators.WindowOps.attributionMarkov(spark, dir).collect()
+    assert(out.isEmpty, s"got ${out.toSeq}")
+  }
 }
