@@ -25,8 +25,11 @@ with the same <suffix> so the file names match, e.g.
     sbt "runMain graft.PlanDump <sfDir> <dirB> d"   # in checkout B
     python3 scripts/plan_diff.py <dirA> <dirB>
 
-Prints each differing file and, last, `<n> of <m> files differ`.
-Exit 0 when none differ, 1 otherwise.
+Prints each differing file followed by `(same operators)` when both sides
+carry the same sequence of `(N) <Name>` operator headers (the formatted
+plan's node details, the sequence PlanDump's audit line counts), else
+`(operators differ)`; last, `<n> of <m> files differ`. Exit 0 when none
+differ, 1 otherwise.
 """
 import os
 import re
@@ -41,6 +44,7 @@ MASKS = [
 ]
 
 
+OPERATOR = re.compile(r"(?m)^\(\d+\) ([A-Za-z]+)")
 LAMBDA_VAR = re.compile(r"(?<=lambda )(\w+)_(\d+)(?=#)")
 
 
@@ -65,6 +69,15 @@ def read_masked(path: str) -> str:
         return mask(f.read())
 
 
+def operators(path: str):
+    """The plan's operator names in `(N) <Name>` header order; None when
+    the file is absent."""
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return OPERATOR.findall(f.read())
+
+
 def differing(dir_a: str, dir_b: str):
     """(sorted names of differing files, number of files compared)."""
     a, b = set(os.listdir(dir_a)), set(os.listdir(dir_b))
@@ -82,7 +95,9 @@ def main(argv) -> int:
         return 2
     diff, total = differing(argv[1], argv[2])
     for n in diff:
-        print(n)
+        same = operators(os.path.join(argv[1], n)) == operators(
+            os.path.join(argv[2], n))
+        print(f"{n} ({'same operators' if same else 'operators differ'})")
     print(f"{len(diff)} of {total} files differ")
     return 1 if diff else 0
 

@@ -11,6 +11,8 @@
   4. POSITIVE: lambda variables that differ only in their numeric suffix
      (`x_6` vs `x_7`) compare equal.
   5. NEGATIVE: an extra lambda compares unequal.
+  6. An alias-only difference is reported `(same operators)`.
+  7. An added `Exchange` node is reported `(operators differ)`.
 
 Usage: python3 scripts/test_plan_diff.py   (exit 0 = all good)
 """
@@ -67,7 +69,8 @@ with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
 
     dump(b, "q_x_d.txt", op="SortAggregate", **IDS_B)
     rc, out = run(a, b)
-    assert rc == 1 and "q_x_d.txt" in out and "1 of 1 files differ" in out, (rc, out)
+    assert rc == 1 and "q_x_d.txt (operators differ)" in out \
+        and "1 of 1 files differ" in out, (rc, out)
 
     dump(b, "q_x_d.txt", **IDS_B)
     dump(a, "q_y_d.txt", **IDS_A)
@@ -93,4 +96,24 @@ with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
     rc, out = run(a, b)
     assert rc == 1 and "1 of 1 files differ" in out, (rc, out)
 
-print("plan_diff fixture: 5/5 cases behaved as expected")
+with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+    # 6. the same operators, one output column renamed
+    dump(a, "q_o_d.txt", **IDS_A)
+    dump(b, "q_o_d.txt", **IDS_B)
+    with open(os.path.join(b, "q_o_d.txt")) as f:
+        text = f.read()
+    with open(os.path.join(b, "q_o_d.txt"), "w") as f:
+        f.write(text.replace("Input [2]: [user_id#9012L, ts#9013]",
+                             "Input [2]: [uid#9012L, ts#9013]"))
+    rc, out = run(a, b)
+    assert rc == 1 and "q_o_d.txt (same operators)" in out \
+        and "1 of 1 files differ" in out, (rc, out)
+
+    # 7. one more Exchange node in the plan
+    with open(os.path.join(b, "q_o_d.txt"), "w") as f:
+        f.write(text + "\n(5) Exchange\nInput [1]: [user_id#9012L]\n")
+    rc, out = run(a, b)
+    assert rc == 1 and "q_o_d.txt (operators differ)" in out \
+        and "1 of 1 files differ" in out, (rc, out)
+
+print("plan_diff fixture: 7/7 cases behaved as expected")

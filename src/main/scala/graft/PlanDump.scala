@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-/** The plan tool: per query, the formatted plan file that optimization
-  * rounds commit as plan evidence (plans/rNN/), and an audit line of
+/** The plan tool: per query, the formatted plan file that plan
+  * comparisons read (`scripts/plan_diff.py`), and an audit line of
   * the EXECUTED plan's shape.
   *
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [q ...]"
@@ -37,9 +37,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * reprint every scalar-subquery subtree at each reference. BNLJ
   * counts are expected to be the deliberate 1-row broadcast scalar
   * frames (corpus totals); anything else shows up as a Cartesian and
-  * is also rejected by PlanGuardSpec. Audit files up to PLAN_AUDIT_r18
-  * were taken on a plain session (10 MB broadcast ceiling) and are
-  * not comparable with this tool's GraftSession audit.
+  * is also rejected by PlanGuardSpec.
   *
   * A query that throws (in either pass) prints `[plandump] <q> FAILED:
   * <class>: <message>` to stderr; the remaining queries still run, the

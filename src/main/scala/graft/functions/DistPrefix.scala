@@ -50,7 +50,8 @@ import org.apache.spark.sql.functions._
   * The offsets array has one entry per (group, bucket) pair, so the
   * group domain must be constant-bounded (segments, languages,
   * variants, calendar days): a data-proportional group domain would
-  * build the array on one task.
+  * build the array on one task, so past [[MaxOffsets]] entries the call
+  * fails loudly.
   *
   * Determinism and fault tolerance: any re-evaluation of any subtree —
   * executor loss, cache eviction, AQE re-plan — assigns identical
@@ -103,6 +104,16 @@ object Dist {
     * full-parallelism ceiling is ~268M rows; past that the clamp raises
     * rows-per-bucket while the bucket count holds at the cap. */
   val MaxBuckets = 4096
+
+  /** Entry bound of the offsets array, which one task collects: at most
+    * |groups| + buckets entries. Past it the offsets subquery fails
+    * in-plan (`raise_error`) naming `Dist.prefix`, the entry count and
+    * this bound, instead of building a group-domain-sized array on one
+    * task. The largest count any caller reaches at sf0.1 is 2,407
+    * (q_daily_p95, grouped by order day); every other caller holds at
+    * most 6. A global order holds one entry per bucket, so only a
+    * grouped call can reach the bound. */
+  val MaxOffsets: Int = 4 * MaxBuckets
 
   /** Lexicographic SORT-ORDER comparison of two cut structs (fields
     * k0..k{m-1}) as an int Column in {-1,0,1}: per-key direction and
@@ -288,8 +299,14 @@ object Dist {
     val keysOf = (x: Column) => struct(
       ((0 until part.size).map(i => x.getField(s"k$i")) :+
         x.getField(pid)): _*)
+    val entries = collect_list(payload)
     val sub = offs
-      .agg(array_sort(collect_list(payload)).as("__dp_a"))
+      .agg(when(size(entries) > MaxOffsets, raise_error(concat(
+          lit("Dist.prefix: the offsets array holds "),
+          size(entries).cast("string"),
+          lit(s" entries, more than the bound $MaxOffsets (4 x MaxBuckets); " +
+              "the group domain is too large for one task"))))
+        .otherwise(array_sort(entries)).as("__dp_a"))
       .select(struct(
         transform(col("__dp_a"), keysOf).as("ks"),
         call_function("dist_fold", col("__dp_a"),

@@ -137,22 +137,20 @@ object WindowOps {
     * table via [[graft.sources.BucketedStore]] (CachedDir fingerprint +
     * ATOMIC_MOVE, plus hash-clustered layout): the two window passes
     * over the raw events run ONCE per corpus state; every session
-    * report (flagship rollup, metrics, paths, exit rate, Markov
-    * transitions, attribution) then reads the store WITHOUT an
-    * exchange — HashPartitioning(user_id) satisfies every consumer's
-    * ClusteredDistribution because each groups/windows on
-    * (user_id, ...) with user_id in the clustering. This is the
-    * reference engine's defining materialization — GA events are
-    * sessionized once into a warehouse table and every report derives
-    * from it — with the FULL 100 TB layout actually built, not just
-    * described: user-bucketed AND day-partitioned (r12, the r11
-    * verdict ask). Day partitioning prunes the listing for date-ranged
-    * reports ([[sessionReportDated]] shows PartitionFilters in its
-    * scan) while the bucket spec keeps every per-user consumer
-    * exchange-free; `day` is the EVENT's day (a session crossing
-    * midnight spans two partitions — date-ranged consumers see exactly
-    * the events in range, the window-total semantics a dated report
-    * wants). */
+    * aggregate or window then reads the store WITHOUT an exchange —
+    * HashPartitioning(user_id) satisfies a ClusteredDistribution on
+    * (user_id, ...). A JOIN back to the store is the exception: it
+    * needs clustering on all its keys (see [[attributionLinear]]).
+    * This is the reference engine's defining materialization — GA
+    * events are sessionized once into a warehouse table and every
+    * report derives from it — with the 100 TB layout built:
+    * user-bucketed AND day-partitioned. Day partitioning prunes the
+    * listing for date-ranged reports ([[sessionReportDated]] shows
+    * PartitionFilters in its scan) while the bucket spec keeps every
+    * per-user consumer exchange-free; `day` is the EVENT's day (a
+    * session crossing midnight spans two partitions — date-ranged
+    * consumers see exactly the events in range, the window-total
+    * semantics a dated report wants). */
   def sessionStore(s: SparkSession, d: String): String =
     graft.sources.BucketedStore.table(
         s, d, "events.parquet", SessionStoreTag, "user_id",
@@ -163,27 +161,73 @@ object WindowOps {
                   to_date(col("ts")).as("day"))
     }
 
-  /** Shared sessionization prelude, read from the persisted bucketed
-    * store (exchange-free for every per-(user, session) consumer).
-    * `keep` lists the extra event columns the caller's aggregate needs
-    * (schema-pruned from the store scan). */
-  private def sessionized(s: SparkSession, d: String,
-                          keep: org.apache.spark.sql.Column*): DataFrame =
+  /** The persisted session store: one row per event (user_id, sid,
+    * event_id, ts, ts_sec, event_type, value, day). Consumers read the
+    * columns they use; the parquet scan reads only those. */
+  private def sessionized(s: SparkSession, d: String): DataFrame =
     s.table(sessionStore(s, d))
-      .select(Seq(col("user_id"), col("sid"), col("event_id"),
-                  col("ts_sec"), col("ts")) ++ keep: _*)
+
+  /** The session grain: one row per (user_id, sid) of `store` carrying
+    * every per-session measure the session reports read, each defined
+    * here once —
+    *  - `start_sec`, `end_sec`, `n_events` and the raw `value_sum`;
+    *  - `landing_type` / `exit_type`: the event type at the min / max
+    *    of the (ts, event_id) struct (`first_k` / `last_k`), a total
+    *    order, so equal-ts ties resolve the same in every engine;
+    *  - `types`, the distinct event types (bounded by the vocabulary);
+    *  - `rev`, the RAW purchase revenue (reports round once, at their
+    *    rollup), `n_purch`, and the 0/1 flags `clicked` / `purchased`.
+    *
+    * The rule every consumer relies on: select the measures you read
+    * from this lazy frame, never persist it. Catalyst's column pruning
+    * then drops every aggregate expression no consumer reads (a
+    * page-depth rollup plans as `count(1)` alone, with no
+    * `collect_set`, `min_by` or `max_by`; PlanSpec pins it), and the
+    * aggregate needs no exchange: the store's user bucketing satisfies
+    * the (user_id, sid) clustering. `store` is the store frame or a
+    * filtered view of it (q_session_report_dated's week). */
+  private def perSession(store: DataFrame): DataFrame = {
+    val k = struct(col("ts"), col("event_id"))
+    val purchase = col("event_type") === "purchase"
+    store.groupBy(col("user_id"), col("sid"))
+      .agg(min(col("ts_sec")).as("start_sec"),
+           max(col("ts_sec")).as("end_sec"),
+           count(lit(1)).as("n_events"),
+           sum(col("value")).as("value_sum"),
+           min_by(col("event_type"), k).as("landing_type"),
+           max_by(col("event_type"), k).as("exit_type"),
+           min(k).as("first_k"),
+           max(k).as("last_k"),
+           collect_set(col("event_type")).as("types"),
+           sum(when(purchase, col("value")).otherwise(lit(0.0))).as("rev"),
+           sum(when(purchase, 1L).otherwise(0L)).as("n_purch"),
+           max(when(col("event_type") === "click", 1L).otherwise(0L))
+             .as("clicked"),
+           max(when(purchase, 1L).otherwise(0L)).as("purchased"))
+  }
+
+  /** In-session transition counts (cur_type, next_type, n): each event
+    * paired with the next one of its session in (ts, event_id) order,
+    * so transitions never cross sessions. The `lead` window needs no
+    * exchange on the store's user bucketing. */
+  private def transitions(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id"), col("sid"))
+      .orderBy(col("ts"), col("event_id"))
+    sessionized(s, d)
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("cur_type"), col("next_type"))
+      .agg(count(lit(1)).as("n"))
+  }
 
   /** q_sessionize — FLAGSHIP #2: 30-min-inactivity sessions per user;
     * per session: start, end, event count, summed value. */
-  def sessionize(s: SparkSession, d: String): DataFrame = {
+  def sessionize(s: SparkSession, d: String): DataFrame =
     ord(
-      sessionized(s, d, col("value")).groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts_sec")).as("start_sec"),
-             max(col("ts_sec")).as("end_sec"),
-             count(lit(1)).as("n_events"),
-             r4(sum(col("value"))).as("session_value")),
+      perSession(sessionized(s, d))
+        .select(col("user_id"), col("sid"), col("start_sec"), col("end_sec"),
+                col("n_events"), r4(col("value_sum")).as("session_value")),
       col("user_id"), col("sid"))
-  }
 
   /** q_session_report_dated — the date-ranged session report (r12, the
     * r11 verdict ask): per-session activity WITHIN a one-week window
@@ -204,15 +248,13 @@ object WindowOps {
     * Determinism: integer seconds/counts, one r4'd value sum, total
     * order on (user_id, sid). */
   def sessionReportDated(s: SparkSession, d: String): DataFrame = {
+    val week = sessionized(s, d)
+      .filter(col("day").between(lit("2024-01-10").cast("date"),
+                                 lit("2024-01-16").cast("date")))
     ord(
-      s.table(sessionStore(s, d))
-        .filter(col("day").between(lit("2024-01-10").cast("date"),
-                                   lit("2024-01-16").cast("date")))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts_sec")).as("start_sec"),
-             max(col("ts_sec")).as("end_sec"),
-             count(lit(1)).as("n_events"),
-             r4(sum(col("value"))).as("window_value")),
+      perSession(week)
+        .select(col("user_id"), col("sid"), col("start_sec"), col("end_sec"),
+                col("n_events"), r4(col("value_sum")).as("window_value")),
       col("user_id"), col("sid"))
   }
 
@@ -224,16 +266,12 @@ object WindowOps {
     *
     * Determinism: durations exact integer seconds from the store; the
     * bucket is integer division; the mean divides two exact ints once,
-    * r4'd.
-    *
-    * Scale shape: the tenth session-store consumer — the per-(user,
-    * sid) aggregate is exchange-free on the bucket layout; only the
-    * ≤|buckets| histogram rows cross the second shuffle. */
+    * r4'd. */
   def sessionDurationHist(s: SparkSession, d: String): DataFrame = {
     ord(
-      sessionized(s, d).groupBy(col("user_id"), col("sid"))
-        .agg((max(col("ts_sec")) - min(col("ts_sec"))).as("dur_sec"),
-             count(lit(1)).as("n_events"))
+      perSession(sessionized(s, d))
+        .select((col("end_sec") - col("start_sec")).as("dur_sec"),
+                col("n_events"))
         .groupBy(expr("dur_sec DIV 300").as("bucket"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(col("n_events")).as("ev_sum"))
@@ -254,13 +292,12 @@ object WindowOps {
     * ints by exact ints in one identically-spelled chain
     * (n_both·n_sessions / (n_a·n_b)), r4'd.
     *
-    * Scale shape: the eleventh session-store consumer — the distinct
-    * (user, sid, type) collapse is exchange-free on the bucket
-    * layout; the pair join is CO-PARTITIONED on (user, sid) with
-    * fan-out ≤ |types| per session; per-type session counts and the
+    * Scale shape: the distinct (user, sid, type) collapse is
+    * exchange-free on the store's bucket layout; the pair join is
+    * CO-PARTITIONED on (user, sid) with fan-out ≤ |types| per session; per-type session counts and the
     * ≤|types|² output frame ride broadcasts. */
   def sessionCooc(s: SparkSession, d: String): DataFrame = {
-    val st = sessionized(s, d, col("event_type"))
+    val st = sessionized(s, d)
       .select(col("user_id"), col("sid"), col("event_type").as("t"))
       .distinct()
       .shared
@@ -294,20 +331,11 @@ object WindowOps {
     *
     * Determinism: per-session flags are exact bool aggregates over
     * the store; the start day is the session's min event second
-    * (exact int) floored to a day; ONE r4'd rate per day.
-    *
-    * Scale shape: the twelfth session-store consumer — per-(user,
-    * sid) flag aggregate exchange-free on the bucket layout; only the
-    * ≤|days| daily rollup crosses the second shuffle. */
+    * (exact int) floored to a day; ONE r4'd rate per day. */
   def cartAbandonment(s: SparkSession, d: String): DataFrame = {
     ord(
-      sessionized(s, d, col("event_type"))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts_sec")).as("start_sec"),
-             max(when(col("event_type") === "click", 1L).otherwise(0L))
-               .as("clicked"),
-             max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-               .as("purchased"))
+      perSession(sessionized(s, d))
+        .select(col("start_sec"), col("clicked"), col("purchased"))
         .filter(col("clicked") === 1L)
         .groupBy(expr("CAST(start_sec DIV 86400 AS INT)").as("day_num"))
         .agg(count(lit(1)).as("n_intent"),
@@ -319,15 +347,10 @@ object WindowOps {
   }
 
   /** q_page_depth — GA's page-depth report: how many sessions contain
-    * exactly N events. The ninth session-store consumer: the per-
-    * session count is exchange-free on the user-bucketed store
-    * (ClusteredDistribution(user_id) satisfied by the bucket layout),
-    * and only the ≤|max depth| histogram rows pass the second,
-    * vocabulary-sized shuffle. */
+    * exactly N events. */
   def pageDepth(s: SparkSession, d: String): DataFrame = {
     ord(
-      sessionized(s, d).groupBy(col("user_id"), col("sid"))
-        .agg(count(lit(1)).as("depth"))
+      perSession(sessionized(s, d)).select(col("n_events").as("depth"))
         .groupBy(col("depth")).agg(count(lit(1)).as("n_sessions")),
       col("depth"))
   }
@@ -358,23 +381,13 @@ object WindowOps {
 
   /** q_session_paths — GA's landing/exit report: per session, the first
     * (landing) and last (exit) event type, rolled up to a count per
-    * (landing, exit) pair — where journeys start and where they die.
-    *
-    * Same sessionization shape as the flagship (one shuffle on user_id,
-    * two window passes); landing/exit come from `min_by`/`max_by` with
-    * a (ts, event_id) struct preference inside the per-session
-    * aggregate — no extra window pass, and the unique event_id makes
-    * equal-ts ties deterministic (the oracle's first_value/last_value
-    * over the same ordering agrees). */
+    * (landing, exit) pair — where journeys start and where they die
+    * (the oracle's first_value/last_value over the same (ts, event_id)
+    * order agrees). */
   def sessionPaths(s: SparkSession, d: String): DataFrame = {
-    val sessions = sessionized(s, d, col("event_type"))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("landing_type"),
-           max_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("exit_type"))
     ord(
-      sessions.groupBy(col("landing_type"), col("exit_type"))
+      perSession(sessionized(s, d))
+        .groupBy(col("landing_type"), col("exit_type"))
         .agg(count(lit(1)).as("n_sessions")),
       col("landing_type"), col("exit_type"))
   }
@@ -382,23 +395,13 @@ object WindowOps {
   /** q_exit_rate — GA's exit-rate report: per event type, the number of
     * sessions that contain it, the number that END on it, and the exit
     * rate (exits / sessions containing — "how often is this page the
-    * last thing a visitor does").
-    *
-    * Scale shape: ONE per-session aggregate computes both the exit type
-    * (`max_by` on a (ts, event_id) struct) and the distinct-type set
-    * (`collect_set`, bounded by the event-type vocabulary); exploding
-    * the set replaces the former distinct + co-partitioned join — one
-    * shuffle fewer, and nothing in the plan is proportional to session
-    * length afterwards. Exit rate divides two exact integer counts
-    * once — the hash-safe r4 pattern. */
+    * last thing a visitor does"). Exploding the session's distinct
+    * type set replaces a distinct + co-partitioned join; the exit rate
+    * divides two exact integer counts once — the hash-safe r4 pattern. */
   def exitRate(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionized(s, d, col("event_type"))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(max_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("exit_type"),
-           collect_set(col("event_type")).as("types"))
     ord(
-      sess.select(col("exit_type"), explode(col("types")).as("event_type"))
+      perSession(sessionized(s, d))
+        .select(col("exit_type"), explode(col("types")).as("event_type"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(when(col("event_type") === col("exit_type"), 1L).otherwise(0L))
@@ -413,22 +416,12 @@ object WindowOps {
     * per landing type, session count, single-event-session count, and
     * bounce rate. Complements q_exit_rate (exit side) and
     * q_session_metrics (per-day bounce) — this is the per-entry-point
-    * view marketers act on.
-    *
-    * Scale shape: identical to q_exit_rate — reads the user-bucketed
-    * session store with NO exchange (groupBy user_id+sid is satisfied
-    * by the store's clustering), min_by picks the entry event in the
-    * same pass, then one partial-aggregable shuffle onto the tiny
-    * landing-type key. The bounce ratio divides two exact integer
+    * view marketers act on. The bounce ratio divides two exact integer
     * counts once — the hash-safe r4 pattern. */
   def landingBounce(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionized(s, d, col("event_type"))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("landing_type"),
-           count(lit(1)).as("n_events"))
     ord(
-      sess.groupBy(col("landing_type"))
+      perSession(sessionized(s, d))
+        .groupBy(col("landing_type"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_bounces"))
         .withColumn("bounce_rate",
@@ -444,12 +437,11 @@ object WindowOps {
     * (integer sums are order-independent, so both engines divide
     * identical doubles — the safe r4 pattern; averaging already-rounded
     * doubles is not, see q_embedding_pq). Day = integer epoch-day
-    * arithmetic — no timezone dependence. One extra aggregate over the
-    * sessionize output; nothing new shuffles. */
+    * arithmetic — no timezone dependence. */
   def sessionMetrics(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionize(s, d)
     ord(
-      sess.groupBy(date_add(lit("1970-01-01").cast("date"),
+      perSession(sessionized(s, d))
+        .groupBy(date_add(lit("1970-01-01").cast("date"),
           expr("CAST(start_sec DIV 86400 AS INT)")).as("day"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(when(col("n_events") === 1, 1).otherwise(0)).as("nb"),
@@ -490,7 +482,7 @@ object WindowOps {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val marked = s.table(sessionStore(s, d))
+    val marked = sessionized(s, d)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("us", expr("unix_micros(ts)"))
       .withColumn("last_view",
@@ -539,37 +531,15 @@ object WindowOps {
       col("w_start"), col("event_type"))
   }
 
-  /** q_markov — first-order Markov transition matrix over in-session
-    * event sequences: for every (current, next) event-type pair, the
-    * transition count and P(next | current). GA's "behavior flow"
-    * report in matrix form, and the input a journey-simulation or
-    * next-event model trains on.
-    *
-    * Scale shape: one extra `lead` on the session window the flagship
-    * already computes (same (user_id) shuffle, same per-user sort —
-    * session boundaries guard the lead so transitions never cross
-    * sessions), then a partial-aggregable count on the tiny
-    * (cur, next) key space. The probability divides two exact integer
-    * counts once — hash-safe r4. */
   /** q_attribution — first-touch revenue attribution: each session's
     * purchase revenue is credited to the session's landing event type
-    * (GA's acquisition-report credit model). One per-session aggregate
-    * over the session store computes the landing type (`min_by` on the
-    * (ts, event_id) struct) and the session's purchase revenue in the
-    * same pass; the rollup to channel is a second tiny aggregate.
-    * Revenue is summed RAW within the session and r4'd only at the
-    * final rollup — one rounding point, the hash-safe pattern. */
+    * (GA's acquisition-report credit model). Revenue is summed RAW
+    * within the session and r4'd only at the final rollup — one
+    * rounding point, the hash-safe pattern. */
   def attribution(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionized(s, d, col("event_type"), col("value"))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("landing_type"),
-           sum(when(col("event_type") === "purchase", col("value"))
-                 .otherwise(lit(0.0))).as("rev"),
-           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-             .as("n_purch"))
     ord(
-      sess.groupBy(col("landing_type"))
+      perSession(sessionized(s, d))
+        .groupBy(col("landing_type"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(col("n_purch")).as("n_purchases"),
              r4(sum(col("rev"))).as("revenue")),
@@ -577,21 +547,12 @@ object WindowOps {
   }
 
   /** q_attribution_last — last-touch revenue attribution: the mirror of
-    * q_attribution with credit going to the session's EXIT event type
-    * (`max_by` on the same (ts, event_id) struct). Same single
-    * per-session aggregate + tiny rollup; same one-rounding-point
-    * revenue rule. */
+    * q_attribution with credit going to the session's EXIT event type;
+    * the same one-rounding-point revenue rule. */
   def attributionLast(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionized(s, d, col("event_type"), col("value"))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(max_by(col("event_type"), struct(col("ts"), col("event_id")))
-             .as("exit_type"),
-           sum(when(col("event_type") === "purchase", col("value"))
-                 .otherwise(lit(0.0))).as("rev"),
-           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-             .as("n_purch"))
     ord(
-      sess.groupBy(col("exit_type"))
+      perSession(sessionized(s, d))
+        .groupBy(col("exit_type"))
         .agg(count(lit(1)).as("n_sessions"),
              sum(col("n_purch")).as("n_purchases"),
              r4(sum(col("rev"))).as("revenue")),
@@ -604,18 +565,29 @@ object WindowOps {
     * event type — the GA linear model between the first-touch and
     * last-touch extremes.
     *
-    * Scale shape: one per-session aggregate (revenue + touch count),
-    * then a join BACK to the session store co-partitioned on
-    * (user_id, sid) — exchange reuse with the aggregate, nothing
-    * re-shuffles — and a final tiny rollup on event type. Revenue is
-    * divided by the touch count per touch and summed RAW across
-    * sessions, rounded once at the end (the q_attribution rule). */
+    * The session measures join BACK to the store on (user_id, sid),
+    * then a tiny rollup on event type. Revenue is divided by the touch
+    * count per touch and summed RAW across sessions, rounded once at
+    * the end (the q_attribution rule).
+    *
+    * Measured cost (sf0.1, local[4]; this query and
+    * q_attribution_position alike): Bench's `.count()` runs 6 jobs,
+    * 6 stages and 72 tasks per rep, a `collect()` 7 stages and 73
+    * tasks. A join needs its inputs clustered on ALL its keys
+    * (`spark.sql.requireAllClusterKeysForCoPartition`), and the user_id
+    * bucketing is not (user_id, sid), so both sides take an
+    * `Exchange hashpartitioning(user_id, sid, 4)`. That leaves the
+    * store-side scan's bucketing unused, and Spark reads it un-bucketed
+    * (`Bucketed: false (disabled by query planner)`): the exchange's map
+    * stage packs the store's 240 files (30 days × 8 buckets, each
+    * charged the 4 MB open cost) into 16 MB splits, 60 tasks. The
+    * session aggregate keeps its bucketed scan (8 tasks); AQE turns the
+    * join into a broadcast and runs the rest as 1-task stages. */
   def attributionLinear(s: SparkSession, d: String): DataFrame = {
-    val ev = sessionized(s, d, col("event_type"), col("value"))
-    val sess = ev.groupBy(col("user_id"), col("sid"))
-      .agg(sum(when(col("event_type") === "purchase", col("value"))
-                 .otherwise(lit(0.0))).as("rev"),
-           count(lit(1)).as("n_touch"))
+    val ev = sessionized(s, d)
+    val sess = perSession(ev)
+      .select(col("user_id"), col("sid"), col("rev"),
+              col("n_events").as("n_touch"))
     ord(
       ev.join(sess, Seq("user_id", "sid"))
         .groupBy(col("event_type"))
@@ -644,11 +616,11 @@ object WindowOps {
     * purchase revenue splits proportionally to the weights and each
     * touch credits its event type.
     *
-    * Scale shape: identical to q_attribution_linear — one per-session
-    * aggregate (revenue + anchor), a join BACK to the session store
-    * co-partitioned on (user_id, sid), one co-partitioned weight-sum
-    * aggregate (exchange reuse all the way — the store is user-bucketed
-    * so nothing re-shuffles), and a final tiny rollup on event type.
+    * Scale shape: the per-session revenue and anchor and the weight
+    * sum are WINDOW aggregates over (user_id, sid) — two stacked
+    * windows on one sort, exchange-free on the store's user bucketing,
+    * with no join back to the store (unlike q_attribution_linear) —
+    * then a tiny rollup on event type.
     *
     * Determinism: the decay exponent is the INTEGER ⌊Δ/h⌋, CLAMPED at
     * −[[DecayExpFloor]], so every weight is an exact power of two
@@ -663,20 +635,13 @@ object WindowOps {
     * binary orders, so sum(w) is exact whatever the add order. A
     * 2⁻⁴⁰ credit share is ~10⁻¹² of the final touch — zero at r4. */
   def attributionDecay(s: SparkSession, d: String): DataFrame = {
-    // One pass over the bucketed session store (r19, replacing the r18
-    // rollup ⋈ store ⋈ weight-sum chain + its persist): the per-session
-    // revenue/anchor and the weight sum are WINDOW aggregates over the
-    // same (user_id, sid) partitioning the store's bucket layout
-    // already provides — two stacked WindowExecs on one sort, zero
-    // joins, zero persists, the store scanned once. The weight-sum
-    // window must be a second node (w derives from the first window's
-    // end_sec) but shares its sort. Values are identical: every window
-    // aggregate here is the session-constant the old join attached
-    // (the weight sum stays the exact dyadic-multiset sum whatever the
-    // add order — the clamp note above).
+    // The weight-sum window must be a second node (w derives from the
+    // first window's end_sec) but shares its sort; the weight sum stays
+    // the exact dyadic-multiset sum whatever the add order (the clamp
+    // note above).
     val wSess = Window.partitionBy(col("user_id"), col("sid"))
     ord(
-      sessionized(s, d, col("event_type"), col("value"))
+      sessionized(s, d)
         .withColumn("rev",
           sum(when(col("event_type") === "purchase", col("value"))
                 .otherwise(lit(0.0))).over(wSess))
@@ -698,12 +663,10 @@ object WindowOps {
     * remaining 20% evenly. Boundary rules are the standard ones:
     * single-touch sessions keep 100%, two-touch sessions split 50/50.
     *
-    * Scale shape: identical to q_attribution_linear — one per-session
-    * aggregate (revenue, touch count, and the min/max (ts, event_id)
-    * structs that identify the endpoint touches in the SAME pass — no
-    * window sort), then a join BACK to the session store co-partitioned
-    * on (user_id, sid) (exchange reuse — the store is user-bucketed so
-    * nothing re-shuffles), and a final tiny rollup on event type.
+    * The session measures (revenue, touch count, and the first/last
+    * (ts, event_id) keys that identify the endpoint touches) join BACK
+    * to the store on (user_id, sid), as in q_attribution_linear, whose
+    * scaladoc gives the join's measured cost.
     *
     * Determinism: endpoint membership is an exact struct equality (the
     * unique event_id breaks ts ties identically in both engines); the
@@ -711,13 +674,10 @@ object WindowOps {
     * expression tree both sides, and revenue is summed RAW and r4'd
     * once at the rollup (the q_attribution rule). */
   def attributionPosition(s: SparkSession, d: String): DataFrame = {
-    val ev = sessionized(s, d, col("event_type"), col("value"))
-    val sess = ev.groupBy(col("user_id"), col("sid"))
-      .agg(sum(when(col("event_type") === "purchase", col("value"))
-                 .otherwise(lit(0.0))).as("rev"),
-           count(lit(1)).as("n_touch"),
-           min(struct(col("ts"), col("event_id"))).as("first_k"),
-           max(struct(col("ts"), col("event_id"))).as("last_k"))
+    val ev = sessionized(s, d)
+    val sess = perSession(ev)
+      .select(col("user_id"), col("sid"), col("rev"),
+              col("n_events").as("n_touch"), col("first_k"), col("last_k"))
     val k = struct(col("ts"), col("event_id"))
     ord(
       ev.join(sess, Seq("user_id", "sid"))
@@ -732,14 +692,14 @@ object WindowOps {
       col("event_type"))
   }
 
+  /** q_markov — first-order Markov transition matrix over in-session
+    * event sequences: for every (current, next) event-type pair, the
+    * transition count and P(next | current). GA's "behavior flow"
+    * report in matrix form, and the input a journey-simulation or
+    * next-event model trains on. The probability divides two exact
+    * integer counts once — hash-safe r4. */
   def markovTransitions(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val trans = sessionized(s, d, col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("cur_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"))
+    val trans = transitions(s, d)
     val totals = trans.groupBy(col("cur_type")).agg(sum(col("n")).as("total"))
     ord(
       trans.join(totals, "cur_type")
@@ -764,18 +724,10 @@ object WindowOps {
     * (≙ DuckDB list_sort + list_reduce — the q_user_entropy rule);
     * H, π and the contribution are identically-spelled single chains
     * r4'd once; a 1-state chain reports H = 0 exactly (ln n − n·ln n/n).
-    *
-    * Scale shape: the lead() window rides the bucketed session store
-    * (exchange-free, the q_markov plan); everything after lives on the
+    * Everything after the transition count lives on the
     * |event_types|²-bounded count frame; the 1-row N frame broadcasts. */
   def entropyRate(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val trans = sessionized(s, d, col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("cur_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"))
+    val trans = transitions(s, d)
     val rows = trans.groupBy(col("cur_type"))
       .agg(sum(col("n")).as("n_i"), count(lit(1)).as("k"),
            sort_array(collect_list(col("n").cast("double"))).as("cs"))
@@ -876,19 +828,16 @@ object WindowOps {
     * per-day MAX is invariant to order within either delta group.
     * Pure integer counts.
     *
-    * Scale shape: session bounds come from the published session store
-    * (one rollup, no exchange past the store's bucketing); the sweep
-    * frame is 2 rows per session — data-proportional, so the running
-    * sum rides [[graft.functions.Dist.prefix]] (range-partitioned
+    * Scale shape: the sweep frame is 2 rows per session —
+    * data-proportional, so the running sum rides [[graft.functions.Dist.prefix]] (range-partitioned
     * chunks with carried-in offsets — prefix sums are associative;
     * r14, the documented chunked form built); the daily rollup is
     * partial-aggregable. Within a same-(t,delta) tie block the running
     * sum is order-dependent per ROW but the per-day max is reached at
     * the block end either way — tie-invariant like the global window. */
   def concurrency(s: SparkSession, d: String): DataFrame = {
-    val sess = sessionized(s, d)
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ts_sec")).as("st"), max(col("ts_sec")).as("en"))
+    val sess = perSession(sessionized(s, d))
+      .select(col("start_sec").as("st"), col("end_sec").as("en"))
       .shared
     val sweep = sess.select(col("st").as("t"), lit(1L).as("delta"))
       .unionAll(sess.select((col("en") + 1L).as("t"), lit(-1L).as("delta")))

@@ -279,6 +279,23 @@ class DistPrefixSpec extends AnyFunSuite {
     }
   }
 
+  /** A data-proportional group domain would collect its offsets array
+    * on one task: past [[Dist.MaxOffsets]] entries the offsets subquery
+    * fails, naming the tier, the entry count and the bound. */
+  test("a group domain past MaxOffsets fails loudly in the offsets subquery") {
+    val nGroups = 20000
+    assert(nGroups > Dist.MaxOffsets)
+    val wide = spark.range(nGroups).select(
+      col("id").cast("string").as("g"), col("id").as("k"))
+    val err = intercept[Exception] {
+      Dist.prefix(wide, Seq("g"), Seq(col("k")), rowNum = Some("rn")).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(msgs.contains("Dist.prefix") && msgs.contains(s"$nGroups entries") &&
+      msgs.contains(s"bound ${Dist.MaxOffsets}"), msgs)
+  }
+
   /** [[graft.functions.DistFold]] pinned directly against a brute
     * force over the same array — strictly-prior sums/maxes reset per
     * group, per-entry group totals, null maxes skipped, empty input —

@@ -156,19 +156,36 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_page_depth / q_user_loyalty: per-user aggregate reads the store with no exchange below it") {
-    // the first (bucketed-store-side) HashAggregate must sit directly on
-    // the scan: HashPartitioning(user_id) satisfies the per-(user, sid)
-    // and per-user ClusteredDistributions, so the only legal exchanges
-    // are the tiny histogram/bucket rollups ABOVE it
-    for (df <- Seq(graft.operators.WindowOps.pageDepth(spark, sf0001),
-                   graft.operators.WindowOps.userLoyalty(spark, sf0001),
-                   graft.operators.WindowOps.sessionDurationHist(spark, sf0001))) {
+    // the first (bucketed-store-side) aggregate (Hash, ObjectHash or
+    // Sort) must sit directly on the scan: HashPartitioning(user_id)
+    // satisfies the per-(user, sid) and per-user ClusteredDistributions,
+    // so the only legal exchanges are the tiny rollups ABOVE it
+    val W = graft.operators.WindowOps
+    for (df <- Seq(W.pageDepth(spark, sf0001),
+                   W.userLoyalty(spark, sf0001),
+                   W.sessionDurationHist(spark, sf0001),
+                   W.sessionize(spark, sf0001),
+                   W.sessionMetrics(spark, sf0001),
+                   W.cartAbandonment(spark, sf0001),
+                   W.sessionPaths(spark, sf0001),
+                   W.exitRate(spark, sf0001),
+                   W.landingBounce(spark, sf0001),
+                   W.attribution(spark, sf0001),
+                   W.attributionLast(spark, sf0001))) {
       val tree = plan(df).split("\n\n").head
       val lines = tree.linesIterator.toVector
-      val lastAgg = lines.lastIndexWhere(_.contains("HashAggregate"))
+      val lastAgg = lines.lastIndexWhere(_.contains("Aggregate"))
       assert(lastAgg >= 0, tree)
       assert(!lines.drop(lastAgg + 1).exists(_.contains("Exchange")),
         "store-side aggregate still shuffles its input:\n" + tree)
+    }
+    // the session grain is one wide lazy aggregate: a report that reads
+    // only counts and bounds must plan none of the other measures
+    for ((name, df) <- Seq("q_page_depth" -> W.pageDepth(spark, sf0001),
+                           "q_concurrency" -> W.concurrency(spark, sf0001))) {
+      val p = plan(df)
+      for (f <- Seq("collect_set", "min_by", "max_by"))
+        assert(!p.contains(f), s"$name plans the unread measure $f:\n" + p)
     }
   }
 
