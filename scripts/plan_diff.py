@@ -12,11 +12,18 @@ that share a name:
   - lambda class names    `Foo$$Lambda$12/0x..` -> `Foo$$Lambda`
   - object hashes         `UnsafeArrayData@5f3a2b1c` -> `UnsafeArrayData@H`
 
-and renumbers lambda variables: Spark names a Scala-API lambda variable
-`x_<n>` from one JVM-wide counter, so per file the distinct names are
-renumbered 1, 2, ... in order of first appearance (`lambda x_6`, `lambda
-y_7`, `lambda x_9` -> `x_1`, `y_2`, `x_3`). A lambda added or removed still
-shows as a difference.
+and renumbers two names Spark draws from JVM-wide counters, per file, 1,
+2, ... in order of first appearance:
+
+  - Scala-API lambda variables `x_<n>` (`lambda x_6`, `lambda y_7`, `lambda
+    x_9` -> `x_1`, `y_2`, `x_3`);
+  - the aliases `_common_expr_<n>` of the common subexpressions a `With`
+    expression factors out (every `nullif` becomes one), so a `nullif`
+    added or removed in one query does not shift the names in every query
+    dumped after it.
+
+A lambda or common expression added or removed still shows as a
+difference.
 
 A file present in only one directory counts as differing. Dump both sides
 with the same <suffix> so the file names match, e.g.
@@ -46,22 +53,25 @@ MASKS = [
 
 OPERATOR = re.compile(r"(?m)^\(\d+\) ([A-Za-z]+)")
 LAMBDA_VAR = re.compile(r"(?<=lambda )(\w+)_(\d+)(?=#)")
+COMMON_EXPR = re.compile(r"(?<!\w)(_common_expr)_(\d+)(?!\d)")
 
 
-def renumber_lambdas(text: str) -> str:
+def renumber(pattern, text: str) -> str:
+    """Rename each distinct `<stem>_<n>` match of `pattern` to
+    `<stem>_<k>`, k = 1, 2, ... in order of first appearance."""
     seen = {}
 
     def repl(m):
         n = seen.setdefault(m.group(0), len(seen) + 1)
         return f"{m.group(1)}_{n}"
 
-    return LAMBDA_VAR.sub(repl, text)
+    return pattern.sub(repl, text)
 
 
 def mask(text: str) -> str:
     for pattern, repl in MASKS:
         text = pattern.sub(repl, text)
-    return renumber_lambdas(text)
+    return renumber(COMMON_EXPR, renumber(LAMBDA_VAR, text))
 
 
 def read_masked(path: str) -> str:

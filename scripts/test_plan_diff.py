@@ -13,6 +13,9 @@
   5. NEGATIVE: an extra lambda compares unequal.
   6. An alias-only difference is reported `(same operators)`.
   7. An added `Exchange` node is reported `(operators differ)`.
+  8. POSITIVE: `_common_expr_<n>` aliases that differ only in their JVM-wide
+     counter compare equal; NEGATIVE: one more common expression compares
+     unequal.
 
 Usage: python3 scripts/test_plan_diff.py   (exit 0 = all good)
 """
@@ -116,4 +119,27 @@ with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
     assert rc == 1 and "q_o_d.txt (operators differ)" in out \
         and "1 of 1 files differ" in out, (rc, out)
 
-print("plan_diff fixture: 7/7 cases behaved as expected")
+COMMON = """(3) Project
+Output [2]: [cents#{a}L, _common_expr_{x}#{b} AS _common_expr_{x}#{b}]
+Input [1]: [cents#{a}L]
+
+(4) Filter
+Condition : (_common_expr_{x}#{b} > 0.0) AND (_common_expr_{y}#{c} > 0.0)
+"""
+
+with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+    # 8. a run that built two more nullif queries first: counters 2/3 vs 0/1
+    with open(os.path.join(a, "q_c_d.txt"), "w") as f:
+        f.write(COMMON.format(a=12, b=13, c=14, x=0, y=1))
+    with open(os.path.join(b, "q_c_d.txt"), "w") as f:
+        f.write(COMMON.format(a=912, b=913, c=914, x=2, y=3))
+    rc, out = run(a, b)
+    assert rc == 0 and out.strip() == "0 of 1 files differ", (rc, out)
+
+    # the same counters, but both conditions read ONE common expression
+    with open(os.path.join(b, "q_c_d.txt"), "w") as f:
+        f.write(COMMON.format(a=912, b=913, c=914, x=2, y=2))
+    rc, out = run(a, b)
+    assert rc == 1 and "1 of 1 files differ" in out, (rc, out)
+
+print("plan_diff fixture: 8/8 cases behaved as expected")

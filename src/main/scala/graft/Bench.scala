@@ -31,6 +31,13 @@ import Probe.num
   * compiles 0 classes unless AQE picks another plan shape that run (see
   * BASELINE.md).
   *
+  * The counters describe the `count()` plan, not the plan that returns
+  * the query's rows: the optimizer prunes every window and aggregate
+  * column that only feeds the report, so a query whose report columns
+  * are costly under-reports here (q_attribution_decay at sf0.1: 3
+  * stages / 62 tasks per rep under `count()`, 4 stages / 11 tasks
+  * under `collect()`).
+  *
   * Records are written atomically ([[Probe.writeAtomic]]) to a canonical
   * and a per-sf path, so runs at different sf dirs do not clobber each
   * other's record and a crashed run never leaves a half-written file.

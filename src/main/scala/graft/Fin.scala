@@ -31,4 +31,9 @@ object Fin {
     * `epoch_us(ts)//1000000` — keeps timestamp math integral and avoids
     * ns/µs unit drift (SURVEY.md §2.10 rule 4). */
   def epochSec(c: Column): Column = unix_timestamp(c)
+
+  /** Exact-integer moments: Σx, Σx², cross products accumulate in
+    * decimal(38,0), exact to 10³⁸ like the oracle's HUGEINT, where an
+    * int64 square of cents or counts can wrap. */
+  def dec(c: Column): Column = c.cast("decimal(38,0)")
 }

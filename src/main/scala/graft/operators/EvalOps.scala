@@ -531,7 +531,6 @@ object EvalOps {
     * pass), no window, no second shuffle; scan pruned to
     * (text, n_chars). */
   def cochranQ(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.Column
     val docs = Tables.documents(s, d)
     val nchars = length(col("text")).cast("long")
     val digits = nchars -
@@ -540,7 +539,6 @@ object EvalOps {
     val r2 = when(size(split(col("text"), " ")) >= 40, 1L).otherwise(0L)
     val r3 = when(digits * lit(20L) < nchars, 1L).otherwise(0L)
     val g = r1 + r2 + r3
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val m = docs
       .select(r1.as("x1"), r2.as("x2"), r3.as("x3"), g.as("g"))
       .agg(count(lit(1)).as("n"),

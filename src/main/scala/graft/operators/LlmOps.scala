@@ -2490,8 +2490,6 @@ object LlmOps {
     * counts, then the source rollup) — the q_token_entropy plan; no
     * window, no collect. */
   def simpsonDiversity(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val tf = Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)

@@ -1567,8 +1567,6 @@ object ReportOps {
     * three dims broadcast; one region rollup; no window. */
   def hhi(s: SparkSession, d: String): DataFrame = {
     import graft.Fin._
-    import org.apache.spark.sql.Column
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = graft.Tables.lineitem(s, d)
       .join(graft.Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(graft.Tables.customer(s, d)

@@ -443,4 +443,29 @@ class PlanSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("q_rsi / q_runs_test / q_hurst: the daily order grain plans only the measures a report reads") {
+    // dailyOrders carries n_orders and cents in one lazy aggregate; the
+    // optimizer must drop the measure a report does not read
+    val T = graft.operators.TimeSeriesOps
+    for ((name, df) <- Seq("q_rsi" -> T.rsi(spark, sf0001),
+                           "q_runs_test" -> T.runsTest(spark, sf0001))) {
+      val p = plan(df)
+      assert(!p.contains("n_orders"), s"$name plans the unread order count:\n" + p)
+    }
+    val p = plan(T.hurst(spark, sf0001))
+    assert(!p.contains("o_totalprice"), "q_hurst reads the unread price:\n" + p)
+  }
+
+  test("q_chisq / q_cramers_v: the contingency dims plan no Expand") {
+    // two countDistincts plan an Expand whose projection order follows
+    // per-JVM expression ids; the cell frame counts its keys without one
+    for (name <- Seq("q_chisq", "q_cramers_v")) {
+      val opt = SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan
+      val expands = opt.collect {
+        case e: org.apache.spark.sql.catalyst.plans.logical.Expand => e
+      }
+      assert(expands.isEmpty, s"$name still plans an Expand:\n" + opt)
+    }
+  }
 }
